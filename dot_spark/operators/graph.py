@@ -288,8 +288,11 @@ def pagerank(
     # rides the final round's eager job (the caches are still alive
     # inside the try block, so the deferred materialization reads
     # them, and the returned plan still sees only the final
-    # checkpoint's RDD stub)
-    ranks = deg.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=False)
+    # checkpoint's RDD stub). With no rounds it IS the returned plan,
+    # so it must materialize before the caches unpersist.
+    ranks = deg.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
+        eager=(iterations == 0)
+    )
     try:
         # r14 fixed-cost consolidation (the connected_components
         # pattern): intermediate rounds checkpoint LAZILY — each

@@ -11247,90 +11247,6 @@ def p19_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(docs, window=2048)
 
 
-# ---------------------------------------------------------------------------
-# Registration order: the driver's CORRECTNESS gate checks the FIRST
-# 50 queries() entries. Rounds 1-3 proved (in turn) the relational
-# core, the LLM-pipeline/streaming rotation, and the round-3
-# additions; rounds 5-6 re-proved every r1/r2-stale query on the
-# regenerated testdata (r6 = 50/50 green). Round 7's window closes
-# the LAST staleness debt: it leads with the 7 queries that have no
-# current official row — the five added/upgraded in r6 and never yet
-# gated (ss4's generated-literal oracle, the s13/s14 round-trips,
-# dd8 cluster formation, the pl5 end-to-end pipeline), f8 (upgraded
-# THIS round from rows-only to the tamper-pattern oracle: sign, flip
-# a hex digit where event_id % 2 = 0, verify — the expected verdict
-# is then digest-free SQL), and ss3 (ALSO upgraded this round from
-# rows-only to a full oracle: deterministic training replayed at
-# oracle-build time, centroids embedded as literals — see
-# _ss3_oracle_sql). Backfill = the oldest-proven (r5-row) queries,
-# VERDICT r6's order. After r07 every registered query's newest
-# official row is r05+, all postdating the last testdata
-# regeneration, and every registered query is value-verified (the
-# full local gate run this round: 110/110 PASS, zero rows-only).
-#
-# ROUND-8 ROTATION PLAN: the 58 queries ADDED in r7 after the
-# window froze — the mid-round ten (dd9_chunk_dedup,
-# pl6_verified_dedup_pipeline, pl7_corpus_build_pipeline,
-# a12_cube_lattice, w7_moving_avg, n7_unpivot,
-# p12_train_val_test_split, t11_bigram_counts,
-# p13_token_budget_sample, j13_interval_overlap_join) plus the
-# late-round eleven (st8_session_window, a14_gapfill_locf,
-# w9_scd2_history, a13_pivot_wide, w8_topk_per_group,
-# t12_domain_stats, p14_weighted_sample, p15_corpus_shuffle,
-# f11_higher_order_arrays, ss5_recall_eval,
-# a15_approx_distinct_audit, mm4_image_resize, ss6_label_centroids,
-# a16_grouping_sets, n8_malformed_json_audit, pl8_merge_upsert,
-# p16_fixed_k_per_stratum, f12_bitwise_aggs, f13_calendar_arith,
-# s15_text_log_source, t13_bpe_merges, pl9_semdedup, a17_global_topk,
-# dd10_edit_distance_verify, a18_winsorize, w10_funnel_steps,
-# pl10_record_linkage, pl11_incremental_lsh,
-# a19_percentile_sketch_audit, n9_nested_json_explode,
-# f14_map_functions, dd11_lsh_quality_eval, f15_array_sort_comparator,
-# t14_stopword_stem, w11_moving_zscore, a20_share_of_total,
-# dd12_url_dedup, t15_unigram_lm_score, j14_attribution_join,
-# c4_quality_ensemble, p17_leakproof_split, mm5_audio_rms,
-# t16_langid_accuracy, j16_tree_flatten, s16_file_lineage,
-# s17_bucketed_join, dd13_minhash_estimator_audit, n10_variant_access)
-# plus the additions after the closing tally (g1_pagerank,
-# g2_triangle_count, g3_bfs_levels, j17_multihop_topk,
-# t17_bpe_encode, a21_cumulative_distinct, a22_cohort_retention,
-# p18_mixture_resample, n11_xml_roundtrip, a23_activity_streaks,
-# ss7_mmr_topk, t18_novelty_score, ss8_sq_topk, j18_snapshot_diff,
-# w12_ewma_smooth) — all of which pass the local driver-gate replica
-# at sf0.01 — have no official row yet. 73 exceeds the 50-query
-# window.
-# READY-MADE r8 WINDOW (the first 50 never-gated in registration
-# order, computed against CORRECTNESS_r01-r06 + the r7 window;
-# SWAPPED INTO _WINDOW_PRIORITY at the start of round 8, as planned):
-#   dd13_minhash_estimator_audit dd9_chunk_dedup ss7_mmr_topk
-#   pl6_verified_dedup_pipeline j13_interval_overlap_join
-#   p12_train_val_test_split p13_token_budget_sample t11_bigram_counts
-#   pl7_corpus_build_pipeline a12_cube_lattice w7_moving_avg n7_unpivot
-#   st8_session_window a14_gapfill_locf w9_scd2_history a13_pivot_wide
-#   w8_topk_per_group t12_domain_stats p14_weighted_sample
-#   p15_corpus_shuffle f11_higher_order_arrays ss5_recall_eval
-#   pl9_semdedup t13_bpe_merges t17_bpe_encode dd11_lsh_quality_eval
-#   pl11_incremental_lsh pl10_record_linkage w10_funnel_steps
-#   dd10_edit_distance_verify a18_winsorize j14_attribution_join
-#   dd12_url_dedup t15_unigram_lm_score n10_variant_access
-#   s17_bucketed_join s16_file_lineage j16_tree_flatten
-#   c4_quality_ensemble p17_leakproof_split w11_moving_zscore
-#   a20_share_of_total f15_array_sort_comparator t14_stopword_stem
-#   f14_map_functions n9_nested_json_explode a19_percentile_sketch_audit
-#   a17_global_topk f12_bitwise_aggs f13_calendar_arith
-# The remaining 23 lead r9 (s15_text_log_source p16_fixed_k_per_stratum
-# pl8_merge_upsert a16_grouping_sets n8_malformed_json_audit
-# t16_langid_accuracy mm5_audio_rms ss6_label_centroids mm4_image_resize
-# a15_approx_distinct_audit n11_xml_roundtrip p18_mixture_resample
-# a21_cumulative_distinct a22_cohort_retention a23_activity_streaks
-# g1_pagerank g2_triangle_count g3_bfs_levels j17_multihop_topk
-# t18_novelty_score ss8_sq_topk j18_snapshot_diff w12_ewma_smooth
-# a24_mad_robust — with it the count above becomes 74; r8 added
-# st5_delayed_retry, t19_bm25_topterms, and t20_pmi_collocations,
-# which join the r9 leaders, making 27), followed by the
-# r5-remainder backfill (j9/a9/a11/s11/pl4 first, then r6 rows).
-# ---------------------------------------------------------------------------
-
 @query(
     "dd15_containment",
     """
@@ -12728,473 +12644,3 @@ def pl15_incremental_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "box_id bigint, lo_a bigint, hi_a bigint, lo_b bigint, hi_b bigint",
     )
     return skipping_audit(stats, boxes, "a16", "b16")
-
-
-# READY-MADE r9 WINDOW (recomputed at the end of round 8 against
-# CORRECTNESS_r01-r07 + the r8 window below; regenerate with the
-# never-gated scan in NOTES_r08 if r8's official gate diverges from
-# its window): after the 50 names below land, exactly 58 registered
-# queries still lack an official row — the r7-era leaders
-#   st5_delayed_retry t19_bm25_topterms t20_pmi_collocations
-#   w12_ewma_smooth j18_snapshot_diff t18_novelty_score ss8_sq_topk
-#   s15_text_log_source p16_fixed_k_per_stratum pl8_merge_upsert
-#   a16_grouping_sets n8_malformed_json_audit t16_langid_accuracy
-#   mm5_audio_rms ss6_label_centroids mm4_image_resize
-#   a15_approx_distinct_audit n11_xml_roundtrip p18_mixture_resample
-#   a21_cumulative_distinct a22_cohort_retention a23_activity_streaks
-#   g1_pagerank g2_triangle_count g3_bfs_levels j17_multihop_topk
-#   a24_mad_robust
-# plus the round-8 additions
-#   ss9_pq_topk t21_readability a25_table_profile a26_frequent_pairs
-#   a27_event_transitions mm6_image_phash mm7_phash_neardup
-#   dd14_substring_spans a28_wilson_ci t22_zipf_audit
-#   g4_link_prediction a29_countmin_audit p19_sequence_packing
-#   dd15_containment a30_k_anonymity a31_expectations_audit
-#   w13_ohlc_resample pl12_dataset_card s18_txlog_snapshot
-#   w14_range_frame
-# plus the session-4 additions
-#   p20_zorder_layout s19_zorder_skipping j19_bloom_prejoin
-#   pl13_incremental_mv a32_linreg_trend a33_skyline
-#   dd16_cdc_chunks pl14_streaming_mv pl15_incremental_zorder
-#   w15_drawdown g5_label_propagation
-# — 58 names, so the r9 window (historical _R9_WINDOW below, gated
-# 50/50 green in CORRECTNESS_r09) was the first 50 in the order above
-# (r7-era leaders first — they are stalest) and the last 8 session-4
-# names (pl13/a32/a33/dd16/pl14/pl15/w15/g5) carried to r10's window
-# (the ACTIVE _WINDOW_PRIORITY constant at the bottom).
-_R8_WINDOW = [
-    # ROUND-8 WINDOW (historical — CORRECTNESS_r08 is 50/50 green on
-    # exactly this list; kept as a constant so the r9 no-overlap
-    # assertion below stays machine-checked).
-    "dd13_minhash_estimator_audit", "dd9_chunk_dedup", "ss7_mmr_topk",
-    "pl6_verified_dedup_pipeline", "j13_interval_overlap_join",
-    "p12_train_val_test_split", "p13_token_budget_sample",
-    "t11_bigram_counts", "pl7_corpus_build_pipeline", "a12_cube_lattice",
-    "w7_moving_avg", "n7_unpivot",
-    "st8_session_window", "a14_gapfill_locf", "w9_scd2_history",
-    "a13_pivot_wide", "w8_topk_per_group", "t12_domain_stats",
-    "p14_weighted_sample", "p15_corpus_shuffle",
-    "f11_higher_order_arrays", "ss5_recall_eval",
-    "pl9_semdedup", "t13_bpe_merges", "t17_bpe_encode",
-    "dd11_lsh_quality_eval", "pl11_incremental_lsh", "pl10_record_linkage",
-    "w10_funnel_steps", "dd10_edit_distance_verify", "a18_winsorize",
-    "j14_attribution_join", "dd12_url_dedup", "t15_unigram_lm_score",
-    "n10_variant_access", "s17_bucketed_join", "s16_file_lineage",
-    "j16_tree_flatten", "c4_quality_ensemble", "p17_leakproof_split",
-    "w11_moving_zscore", "a20_share_of_total",
-    "f15_array_sort_comparator", "t14_stopword_stem", "f14_map_functions",
-    "n9_nested_json_explode", "a19_percentile_sketch_audit",
-    "a17_global_topk", "f12_bitwise_aggs", "f13_calendar_arith",
-]
-
-assert len(_R8_WINDOW) == 50, len(_R8_WINDOW)
-
-# ROUND-9 WINDOW (historical — CORRECTNESS_r09 is 50/50 green on
-# exactly this list; kept as a constant so the r10 no-overlap
-# assertion below stays machine-checked).
-_R9_WINDOW = [
-    # r7-era leaders (stalest, 27)
-    "st5_delayed_retry", "t19_bm25_topterms", "t20_pmi_collocations",
-    "w12_ewma_smooth", "j18_snapshot_diff", "t18_novelty_score",
-    "ss8_sq_topk", "s15_text_log_source", "p16_fixed_k_per_stratum",
-    "pl8_merge_upsert", "a16_grouping_sets", "n8_malformed_json_audit",
-    "t16_langid_accuracy", "mm5_audio_rms", "ss6_label_centroids",
-    "mm4_image_resize", "a15_approx_distinct_audit", "n11_xml_roundtrip",
-    "p18_mixture_resample", "a21_cumulative_distinct",
-    "a22_cohort_retention", "a23_activity_streaks", "g1_pagerank",
-    "g2_triangle_count", "g3_bfs_levels", "j17_multihop_topk",
-    "a24_mad_robust",
-    # round-8 mid-round additions (20)
-    "ss9_pq_topk", "t21_readability", "a25_table_profile",
-    "a26_frequent_pairs", "a27_event_transitions", "mm6_image_phash",
-    "mm7_phash_neardup", "dd14_substring_spans", "a28_wilson_ci",
-    "t22_zipf_audit", "g4_link_prediction", "a29_countmin_audit",
-    "p19_sequence_packing", "dd15_containment", "a30_k_anonymity",
-    "a31_expectations_audit", "w13_ohlc_resample", "pl12_dataset_card",
-    "s18_txlog_snapshot", "w14_range_frame",
-    # session-4 additions (first 3 of 8; pl13/a32/a33/dd16/pl14
-    # carry to r10)
-    "p20_zorder_layout", "s19_zorder_skipping", "j19_bloom_prejoin",
-]
-assert len(_R9_WINDOW) == 50, len(_R9_WINDOW)
-assert not set(_R9_WINDOW) & set(_R8_WINDOW), "r9 overlaps r8"
-
-# ROUND-10 WINDOW (historical — CORRECTNESS_r10 is 50/50 green on
-# exactly this list; kept as a constant so the r11 overlap
-# accounting below stays machine-checked).
-_R10_WINDOW = [
-    # never officially gated (15)
-    "pl13_incremental_mv", "a32_linreg_trend", "a33_skyline",
-    "dd16_cdc_chunks", "pl14_streaming_mv", "pl15_incremental_zorder",
-    "w15_drawdown", "g5_label_propagation",
-    "s20_manifest_skipping", "mm8_silence_segments", "pl16_incremental_ivf",
-    "ss10_rrf_fusion", "t23_bigram_lm_score", "s21_fixed_width_source",
-    "dd17_bloom_history_dedup",
-    # stalest previously-gated backfill (35, newest row r5–r6;
-    # mm3's semantics changed in r9 — re-gate under the new oracle)
-    "mm3_frame_sampling", "a11_group_percentiles", "a9_hypertable_rollup",
-    "j9_range_join", "pl4_corpus_ingest_dedup", "s11_attributed_publish",
-    "a10_string_agg_ordered", "a2_watermark_max", "a3_conditional_agg",
-    "a4_count_predicate", "a5_collect_sorted_list", "a6_rollup_subtotals",
-    "a7_distribution_stats", "a8_count_distinct", "dd4_ngram_jaccard",
-    "f10_try_cast_coerce", "f1_regex_match", "f2_ts_format",
-    "f3_epoch_seconds", "f4_decimal_negate", "f5_string_ops",
-    "f6_hour_gate", "f7_flag_coerce", "f9_json_access",
-    "j10_intersect_except", "j11_null_safe_join", "j12_exists_semi_join",
-    "j4_broadcast_lookup", "j6_salted_skew_join",
-    # round-10 additions (full-width WooCommerce flattening) take the
-    # last six slots from the stalest re-gates (n1/n3/n4/n6 and
-    # j2/j3 move to the r11 backfill): first-gating new queries beats
-    # re-verifying already-green ones
-    "n12_woo_flat_orders", "n13_woo_flat_order_items",
-    "n14_woo_flat_products", "n15_woo_flat_refunds",
-    "n16_woo_flat_refund_items", "n17_woo_flat_product_attributes",
-]
-assert len(_R10_WINDOW) == 50, len(_R10_WINDOW)
-assert not set(_R10_WINDOW) & set(_R9_WINDOW), "r10 overlaps r9"
-# ROUND-11 WINDOW (historical — CORRECTNESS_r11 is 50/50 green on
-# exactly this list; kept as a constant so the r12 overlap
-# accounting below stays machine-checked): the staleness backfill
-# staged at the end
-# of round 10, with four slots swapped for queries whose SEMANTICS or
-# SCALE GUARDS change in round 11 (re-gating changed code beats
-# re-verifying untouched code, same principle as the r10 n12-n17
-# swap): pl9_semdedup + mm7_phash_neardup (both inherit the new
-# max_bucket hot-cell cap), mm3_frame_sampling (oracle re-pinned on
-# full baseline-JPEG entropy decode — its only full-decode row, r10,
-# certifies the DC-only semantics), and t13b_bpe_merges_batched (new
-# query: batched top-N disjoint merge selection) — plus TWO more
-# swaps for the ADVICE.md woo-flatten semantic fixes (last-wins meta
-# lifts, exact-'1' sticky flag pivots, verbatim donor_premium NULL
-# freeze): n13_woo_flat_order_items (output changed — the fixture has
-# present-but-NULL donor_premium values) and n14_woo_flat_products
-# (fixture extended with duplicate-key coverage). Displaced to the
-# r12 staging: p10/p11/a1/c3/c2/f8 (all r7-stale, code untouched).
-# Composition: the 26 queries whose newest green row is r6 (including
-# the six the r10 window displaced: n1/n3/n4/n6, j2/j3), then the 18
-# stalest r7 rows, then the 6 changed-this-round slots. dd4b leads
-# the r7 tier because its plan changed in r10 (the shared-shingle
-# checkpoint repair) after its last official row. Asserted against
-# the registry so a typo cannot survive.
-_R11_WINDOW = [
-    # r6-stale (26)
-    "j2_union_distinct", "j3_union_all", "n1_struct_extract",
-    "n3_kv_pivot", "n4_element_first_last", "n6_json_stringify",
-    "p2_positional_projection", "p4_filter_gate", "p5_status_route",
-    "p6_isin_filter", "p8_coalesce_defaults", "p9_string_norm",
-    "pl2_woo_incremental", "pl2b_woo_incremental_by_store",
-    "s10_object_store_export", "s6_sql_source", "s9_csv_checkpoint",
-    "st1_windowed_agg", "st2_superseded_stream", "t3_language_id",
-    "t4_fingerprint", "t5_length_histogram", "t6_sequence_packing",
-    "w2_distinct_rows", "w3_sort_limit_top1", "w5_rank_lattice",
-    # r7-stale (14; dd4b first — plan changed in r10). j7/j8/dd5/j1
-    # (r7-stale, code untouched, their families still represented by
-    # in-window siblings) are displaced to the r12 staging to make
-    # room for the four mid-round-11 additions below — first-gating
-    # new queries beats re-verifying already-green ones (the r10
-    # n12-n17 principle).
-    "dd4b_ngram_jaccard_capped", "c1_classify_runs",
-    "dd1_exact_dedup",
-    "dd2_minhash_lsh_candidates", "dd3_simhash",
-    "dd5b_bucketed_neardup", "dd6_decontamination",
-    "dd7_embedding_decontamination", "dd8_dedup_clusters",
-    "j5_parent_child_join",
-    "mm1_decode_media",
-    "mm2_media_features", "n2_explode_tokens", "n5_sticky_carry",
-    # changed-in-r11 re-gates + new queries (10: t13b from the
-    # round's start; t24/t25/t26/p21 added mid-round — CCNet
-    # perplexity prune, hashed linear quality classifier, DSIR
-    # importance resampling, Efraimidis-Spirakis exact-k sampling)
-    "pl9_semdedup", "mm7_phash_neardup", "mm3_frame_sampling",
-    "t13b_bpe_merges_batched", "n13_woo_flat_order_items",
-    "n14_woo_flat_products", "t24_perplexity_prune",
-    "t25_hashed_linear_quality", "t26_dsir_importance",
-    "p21_weighted_topk_sample",
-]
-assert len(_R11_WINDOW) == 50, len(_R11_WINDOW)
-_missing = [n for n in _R11_WINDOW if n not in QUERIES]
-assert not _missing, f"window names not registered: {_missing}"
-# mm3 is deliberately re-gated one round after its r10 row because
-# its decode semantics change in r11 (DC-only -> full entropy
-# decode); everything else respects the no-repeat rotation.
-assert set(_R11_WINDOW) & set(_R10_WINDOW) == {
-    "mm3_frame_sampling",
-    "n13_woo_flat_order_items",
-    "n14_woo_flat_products",
-}, "r11 overlaps r10 beyond the planned semantics-changed re-gates"
-# ROUND-12 WINDOW (active): the staleness backfill staged verbatim at
-# the end of round 11 and executed unchanged this round. Composition
-# (computed at the start of round 11 from CORRECTNESS_r01-r10 + the
-# r11 window): the 36 queries whose
-# newest green row will still be r7 after r11 lands (26 never
-# displaced + p10/p11/a1/c3/c2/f8 displaced at round start +
-# j7/j8/dd5/j1 displaced mid-round for t24/t25/t26/p21), then the 14
-# stalest r8 rows (alphabetical within the r8 cohort; f12/f13/f14/
-# f15 and j13/j14 slide to r13).
-#
-# Round 12 deliberately swaps NOTHING in, although dd5b/pl9/mm7 gain
-# an auto-derived max_bucket this round: the derivation is proven
-# output-identical on the fixtures (the cap-never-fires law tests in
-# tests/test_dedup.py + a local oracle_check replica of all three at
-# sf0.01 AND sf0.1, NOTES_r12), so their r11 rows still certify the
-# outputs and an official re-gate would produce byte-identical rows —
-# executing the staged backfill verbatim is strictly more
-# information (the r11 verdict's watch item 3: the staged window
-# must actually run or staleness ratchets).
-_R12_WINDOW = [
-    # r7-stale (36)
-    "a1_group_having", "c2_webhook_route", "c3_quality_filter",
-    "dd5_embedding_neardup", "f8_hmac_sha256", "j1_anti_join",
-    "j7_star_join_rollup", "j8_asof_join", "p10_deterministic_sample",
-    "p11_stratified_sample", "p1_schema_align", "p7_sentinel_null",
-    "pl1_okta_refresh", "pl3_event_retry_pipeline",
-    "pl5_corpus_dedup_pipeline", "s13_jsonl_roundtrip",
-    "s14_orc_roundtrip", "s1_scan_projection", "s2_paged_rest_scan",
-    "s4_csv_parse", "ss1_cosine_topk", "ss2_ivf_topk",
-    "ss3_ivf_trained_topk", "ss4_lsh_topk", "st3_stream_corpus_dedup",
-    "st4_attribute_fanout", "st7_drain_machine", "t10_doc_chunking",
-    "t1_token_stats", "t2_quality_score", "t7_repetition_ratio",
-    "t8_pii_scrub", "t9_tfidf_topterms", "w1_dedup_keep_latest",
-    "w4_superseded_dedup", "w6_sessionize",
-    # r8-stale (14, alphabetical)
-    "a12_cube_lattice", "a13_pivot_wide", "a14_gapfill_locf",
-    "a17_global_topk", "a18_winsorize", "a19_percentile_sketch_audit",
-    "a20_share_of_total", "c4_quality_ensemble",
-    "dd10_edit_distance_verify", "dd11_lsh_quality_eval",
-    "dd12_url_dedup", "dd13_minhash_estimator_audit", "dd9_chunk_dedup",
-    "f11_higher_order_arrays",
-]
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-_r12_missing = [n for n in _R12_WINDOW if n not in QUERIES]
-assert not _r12_missing, f"r12 window names not registered: {_r12_missing}"
-assert not set(_R12_WINDOW) & set(_R11_WINDOW), "r12 overlaps r11"
-# ROUND-13 WINDOW (HISTORICAL — executed verbatim as CORRECTNESS_r13,
-# 50/50 green; kept for the no-overlap assertion chain).
-# Composition (computed at the
-# start of round
-# 12 from CORRECTNESS_r01-r11 + the r12 window): the 35 queries whose
-# newest green row will still be r8 after r12 lands (the 50-row r8
-# cohort minus pl9_semdedup, re-gated r11, minus the 14 r8 rows the
-# r12 window carries), then the 7 stalest r9 rows
-# (alphabetical within the r9 cohort; the remaining r9 rows slide
-# to r14). Seven swaps at staging time for queries NEW in round 12 —
-# mm9 (decode error accounting), t27 (interpolated-KN scoring), t28
-# (Gopher rules), p22 (temperature mixture), dd18 (soft dedup), pl17
-# (the composed soft corpus build) and ss11 (multi-probe recall
-# curve) take the last seven slots; dd15/dd14/a31/a30/a29/a28/a27
-# (r9-stale) slide to r14 — first-gating new queries beats
-# re-verifying green ones (the r10 n12-n17 principle), and the
-# displaced rows stay inside the 4-round staleness bound at the r13
-# horizon. If round 13 changes any query's semantics, swap it in
-# and push the tail to r14 staging — re-gating changed code beats
-# re-verifying untouched code. tests/test_gate_window.py enforces
-# the staleness policy (no query's latest official row more than 4
-# rounds stale after this staged window executes) against the
-# committed CORRECTNESS receipts.
-_R13_WINDOW = [
-    # r8-stale (35, alphabetical)
-    "f12_bitwise_aggs", "f13_calendar_arith", "f14_map_functions",
-    "f15_array_sort_comparator", "j13_interval_overlap_join",
-    "j14_attribution_join", "j16_tree_flatten", "n10_variant_access",
-    "n7_unpivot", "n9_nested_json_explode", "p12_train_val_test_split",
-    "p13_token_budget_sample", "p14_weighted_sample",
-    "p15_corpus_shuffle", "p17_leakproof_split", "pl10_record_linkage",
-    "pl11_incremental_lsh", "pl6_verified_dedup_pipeline",
-    "pl7_corpus_build_pipeline", "s16_file_lineage", "s17_bucketed_join",
-    "ss5_recall_eval", "ss7_mmr_topk", "st8_session_window",
-    "t11_bigram_counts", "t12_domain_stats", "t13_bpe_merges",
-    "t14_stopword_stem", "t15_unigram_lm_score", "t17_bpe_encode",
-    "w10_funnel_steps", "w11_moving_zscore", "w7_moving_avg",
-    "w8_topk_per_group", "w9_scd2_history",
-    # r9-stale (7, alphabetical within the r9 cohort)
-    "a15_approx_distinct_audit", "a16_grouping_sets",
-    "a21_cumulative_distinct", "a22_cohort_retention",
-    "a23_activity_streaks", "a24_mad_robust", "a25_table_profile",
-    # new in round 12 (8): first-gate the decode error-accounting
-    # audit, the KN bigram scorer, the Gopher rule filter, the
-    # temperature mixture sampler, the soft-dedup reweighter, the
-    # composed soft-corpus-build pipeline, the multi-probe recall
-    # curve, and the forward as-of join; dd15_containment,
-    # dd14_substring_spans, a31_expectations_audit, a30_k_anonymity,
-    # a29_countmin_audit, a28_wilson_ci, a27_event_transitions and
-    # a26_frequent_pairs slide to r14 (all r9-stale — still exactly
-    # at the 4-round bound at the r13 horizon, enforced by
-    # tests/test_gate_window.py)
-    "mm9_progressive_jpeg_audit", "t27_kneser_ney_score",
-    "t28_gopher_rules", "p22_temperature_mixture", "dd18_soft_dedup",
-    "pl17_soft_corpus_build", "ss11_multiprobe_recall",
-    "j20_asof_forward",
-]
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-_r13_missing = [n for n in _R13_WINDOW if n not in QUERIES]
-assert not _r13_missing, f"r13 window names not registered: {_r13_missing}"
-assert not set(_R13_WINDOW) & set(_R12_WINDOW), "r13 overlaps r12"
-# ROUND-14 WINDOW (HISTORICAL — executed verbatim as
-# CORRECTNESS_r14, 50/50 green; kept for the no-overlap assertion
-# chain). Composition
-# (computed at the start of round
-# 13 from CORRECTNESS_r01-r12 + the r13 window above): after the r13
-# window lands, exactly 42 queries' newest green row is r9 — ALL of
-# them must be here (they would be 5 rounds stale at the r14
-# horizon, past the 4-round bound tests/test_gate_window.py
-# enforces) — followed by 5 r10 fills (alphabetical within the r10
-# cohort) and the three round-13 additions (j21/mm10/dd19, which
-# displaced three r10 fills per the first-gate-new-code policy —
-# first-gating new/changed code beats re-verifying untouched green
-# code, the r10 n12-n17 principle).
-_R14_WINDOW = [
-    # r9-stale (42, alphabetical) — bound-critical: every one of
-    # these must gate at r14 or it breaches the 4-round staleness
-    # bound. Never displace these.
-    "a26_frequent_pairs", "a27_event_transitions", "a28_wilson_ci",
-    "a29_countmin_audit", "a30_k_anonymity", "a31_expectations_audit",
-    "dd14_substring_spans", "dd15_containment", "g1_pagerank",
-    "g2_triangle_count", "g3_bfs_levels", "g4_link_prediction",
-    "j17_multihop_topk", "j18_snapshot_diff", "j19_bloom_prejoin",
-    "mm4_image_resize", "mm5_audio_rms", "mm6_image_phash",
-    "n11_xml_roundtrip", "n8_malformed_json_audit",
-    "p16_fixed_k_per_stratum", "p18_mixture_resample",
-    "p19_sequence_packing", "p20_zorder_layout", "pl12_dataset_card",
-    "pl8_merge_upsert", "s15_text_log_source", "s18_txlog_snapshot",
-    "s19_zorder_skipping", "ss6_label_centroids", "ss8_sq_topk",
-    "ss9_pq_topk", "st5_delayed_retry", "t16_langid_accuracy",
-    "t18_novelty_score", "t19_bm25_topterms", "t20_pmi_collocations",
-    "t21_readability", "t22_zipf_audit", "w12_ewma_smooth",
-    "w13_ohlc_resample", "w14_range_frame",
-    # r10-stale fills (5, alphabetical within the r10 cohort) —
-    # displaceable by new-in-round-13 queries per the policy above
-    # (a3_conditional_agg, a4_count_predicate and
-    # a5_collect_sorted_list displaced to r15 staging by the three
-    # round-13 additions below).
-    "a10_string_agg_ordered", "a11_group_percentiles",
-    "a2_watermark_max", "a32_linreg_trend", "a33_skyline",
-    # new in round 13 (first-gate at r14): the LEFT as-of join —
-    # j8/j20 gate how='inner' only; this gates how='left' (keep
-    # unconverted clicks) against DuckDB's ASOF LEFT JOIN — the
-    # color-JPEG pixel-content pin (exact per-channel sums over the
-    # closed-form YCbCr fixture class) — and the exact suffix-array
-    # substring dedup (dd14's collision-free gold standard).
-    "j21_asof_left",
-    "mm10_jpeg_color_pixels",
-    "dd19_suffix_array_spans",
-]
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-_r14_missing = [n for n in _R14_WINDOW if n not in QUERIES]
-assert not _r14_missing, f"r14 window names not registered: {_r14_missing}"
-assert not set(_R14_WINDOW) & set(_R13_WINDOW), "r14 overlaps r13"
-# ROUND-15 WINDOW (ACTIVE — swapped in as the first commit of round
-# 15, exactly the list staged at the end of round 14 MODULO the four
-# swaps the r14 verdict itself directed ("swap n13_woo_flat_order_items
-# + mm1/mm2/mm3 into the displaceable fill slots — they were rewritten
-# this round on r11 receipts"): n13 (narrow-struct collect rewrite),
-# mm1/mm2/mm3 (shared rolling-buffer Huffman decoder under every JPEG
-# path) enter; the two r11 fills c1_classify_runs/dd1_exact_dedup
-# (untouched since r11) and the two PNG pins mm12_png_pixels/
-# mm13_png_audit (new-in-r14 but pinning the PNG decoder, which the
-# r14 optimization commits did NOT touch) slide to r16 staging —
-# re-gating rewritten code beats first-gating pins of untouched code,
-# and never-gated queries are legal in the STAGED window per
-# tests/test_gate_window.py. Composition otherwise as staged (computed
-# mechanically at the start of round 14 from CORRECTNESS_r01-r13 +
-# the r14 window above): after the r14 window lands, exactly 42
-# queries' newest green row is r10 — ALL of them must be here (they
-# would be 5 rounds stale at the r15 horizon, past the 4-round bound
-# tests/test_gate_window.py enforces).
-_WINDOW_PRIORITY = [
-    # r10-stale (42, alphabetical) — bound-critical: every one of
-    # these must gate at r15 or it breaches the 4-round staleness
-    # bound. Never displace these.
-    "a3_conditional_agg", "a4_count_predicate", "a5_collect_sorted_list",
-    "a6_rollup_subtotals", "a7_distribution_stats", "a8_count_distinct",
-    "a9_hypertable_rollup", "dd16_cdc_chunks", "dd17_bloom_history_dedup",
-    "dd4_ngram_jaccard", "f10_try_cast_coerce", "f1_regex_match",
-    "f2_ts_format", "f3_epoch_seconds", "f4_decimal_negate",
-    "f5_string_ops", "f6_hour_gate", "f7_flag_coerce", "f9_json_access",
-    "g5_label_propagation", "j10_intersect_except", "j11_null_safe_join",
-    "j12_exists_semi_join", "j4_broadcast_lookup", "j6_salted_skew_join",
-    "j9_range_join", "mm8_silence_segments", "n12_woo_flat_orders",
-    "n15_woo_flat_refunds", "n16_woo_flat_refund_items",
-    "n17_woo_flat_product_attributes", "pl13_incremental_mv",
-    "pl14_streaming_mv", "pl15_incremental_zorder", "pl16_incremental_ivf",
-    "pl4_corpus_ingest_dedup", "s11_attributed_publish",
-    "s20_manifest_skipping", "s21_fixed_width_source", "ss10_rrf_fusion",
-    "t23_bigram_lm_score", "w15_drawdown",
-    # rewritten-in-r14 re-gates (4, the r14 verdict's directed swaps;
-    # all r11-latest): the narrow-struct collect_list synthesis and
-    # the shared rolling-buffer prefix-LUT Huffman decoder that now
-    # underlies every JPEG decode path.
-    "n13_woo_flat_order_items", "mm1_decode_media",
-    "mm2_media_features", "mm3_frame_sampling",
-    # round-14 swaps: mm9's SEMANTICS changed (the progressive class
-    # flips from accounted ok=false to a real multi-scan decode), so
-    # it must re-gate; mm11 (progressive pixel-content pin), dd20
-    # (intra-document repeated-substring spans) and mm14 (Adobe
-    # CMYK/YCCK pixel pin) are new JPEG-path pins — the
-    # first-gate-new-code policy. The PNG pins mm12/mm13 slide to
-    # r16 staging (see the header comment).
-    "mm9_progressive_jpeg_audit",
-    "mm11_jpeg_progressive_pixels",
-    "dd20_self_repetition_spans",
-    "mm14_jpeg_cmyk_pixels",
-]
-assert len(_WINDOW_PRIORITY) == 50, len(_WINDOW_PRIORITY)
-_r15_missing = [n for n in _WINDOW_PRIORITY if n not in QUERIES]
-assert not _r15_missing, f"r15 window names not registered: {_r15_missing}"
-assert not set(_WINDOW_PRIORITY) & set(_R14_WINDOW), "r15 overlaps r14"
-# The r16 rotation, MACHINE-READABLE — next round, swap this list
-# into _WINDOW_PRIORITY. Composition (computed mechanically at the
-# start of round 15 from CORRECTNESS_r01-r14 + the r15 window above):
-# after the r15 window lands, exactly 46 queries' newest green row is
-# r11 — ALL of them must be here (they would be 5 rounds stale at the
-# r16 horizon, past the 4-round bound tests/test_gate_window.py
-# enforces; the set includes the displaced c1_classify_runs and
-# dd1_exact_dedup) — followed by the 2 stalest r12 rows (alphabetical
-# within the r12 cohort; the remaining r12 rows slide to r17, where
-# they sit exactly at the bound) and the two never-gated PNG pins
-# displaced from the r15 window (mm12/mm13 — never-gated queries must
-# sit in the active or staged window). If round 15 adds new queries
-# or changes any query's semantics, swap them into the LAST slots
-# here (displacing the r12 fills or the PNG pins, never the r11
-# cohort — the r11 rows are bound-critical).
-_R16_WINDOW = [
-    # r11-stale (46, alphabetical) — bound-critical.
-    "c1_classify_runs", "dd1_exact_dedup",
-    "dd2_minhash_lsh_candidates", "dd3_simhash",
-    "dd4b_ngram_jaccard_capped", "dd5b_bucketed_neardup",
-    "dd6_decontamination", "dd7_embedding_decontamination",
-    "dd8_dedup_clusters", "j2_union_distinct", "j3_union_all",
-    "j5_parent_child_join", "mm7_phash_neardup",
-    "n14_woo_flat_products", "n1_struct_extract", "n2_explode_tokens",
-    "n3_kv_pivot", "n4_element_first_last", "n5_sticky_carry",
-    "n6_json_stringify", "p21_weighted_topk_sample",
-    "p2_positional_projection", "p4_filter_gate", "p5_status_route",
-    "p6_isin_filter", "p8_coalesce_defaults", "p9_string_norm",
-    "pl2_woo_incremental", "pl2b_woo_incremental_by_store",
-    "pl9_semdedup", "s10_object_store_export", "s6_sql_source",
-    "s9_csv_checkpoint", "st1_windowed_agg", "st2_superseded_stream",
-    "t13b_bpe_merges_batched", "t24_perplexity_prune",
-    "t25_hashed_linear_quality", "t26_dsir_importance",
-    "t3_language_id", "t4_fingerprint", "t5_length_histogram",
-    "t6_sequence_packing", "w2_distinct_rows", "w3_sort_limit_top1",
-    "w5_rank_lattice",
-    # r12-stale fills (2, alphabetical within the r12 cohort) —
-    # displaceable by new-in-round-15 queries per the policy above.
-    "a12_cube_lattice", "a13_pivot_wide",
-    # never-gated PNG pins displaced from the r15 window (full-PNG
-    # pixel-content pin: filters/palette/alpha/Adam7; PNG decode
-    # accounting incl. the 16-bit boundary).
-    "mm12_png_pixels", "mm13_png_audit",
-]
-assert len(_R16_WINDOW) == 50, len(_R16_WINDOW)
-_r16_missing = [n for n in _R16_WINDOW if n not in QUERIES]
-assert not _r16_missing, f"r16 window names not registered: {_r16_missing}"
-assert not set(_R16_WINDOW) & set(_WINDOW_PRIORITY), "r16 overlaps r15"
-# Generic alias so tests/test_gate_window.py reads "the staged
-# next-round window" without hardcoding a round number — next
-# round's swap renames _R16_WINDOW to _WINDOW_PRIORITY and repoints
-# this alias at the freshly staged _R17_WINDOW.
-_STAGED_WINDOW = _R16_WINDOW
-QUERIES = {
-    **{n: QUERIES[n] for n in _WINDOW_PRIORITY},
-    **{n: f for n, f in QUERIES.items() if n not in _WINDOW_PRIORITY},
-}

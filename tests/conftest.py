@@ -11,6 +11,11 @@ from dot_spark import get_spark  # noqa: E402
 
 SF_TEST_DIR = "/root/testdata/sf0.001"
 
+# The generated-literal oracles (ss3, t13, ...) replay training on the
+# gate tables when dot_spark.queries is imported; they must read the
+# same tables the registry sweep runs on.
+os.environ["DOT_SPARK_GATE_SF_DIR"] = SF_TEST_DIR
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -42,7 +47,7 @@ def sf_dir():
 def registry_dfs(spark, sf_dir):
     """One DataFrame per registered query, built ONCE per test
     session and shared by every full-registry sweep (the sf0.001
-    smoke, the scalar-output audit, the Python-eval audit, the
+    oracle sweep, the scalar-output audit, the Python-eval audit, the
     staged-HOF audit, the plan-count baseline net). Iterative/eager
     queries EXECUTE at DataFrame-build time (g1's rounds, pl7's
     closure probes, t13's merge loop), so each additional
@@ -77,6 +82,11 @@ def _registry(spark, sf_dir):
     if not hasattr(_registry, "value"):
         from dot_spark.queries import QUERIES
 
+        # a cached subtree would leak InMemoryTableScan nodes into the
+        # audited plans; fail on a test order that leaves one behind
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+            "catalog cache not empty at registry build"
+        )
         dfs = {name: fn(spark, sf_dir) for name, fn in QUERIES.items()}
         plans = {
             name: df._jdf.queryExecution().executedPlan().toString()

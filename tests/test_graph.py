@@ -211,6 +211,13 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert [f.name for f in got.schema.fields] == ["node", "rank"]
 
 
+def test_pagerank_zero_iterations_returns_uniform_ranks(spark):
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
+    rows = pagerank(_edges_df(spark, pairs), iterations=0).collect()
+    assert sorted(r["node"] for r in rows) == [1, 2, 3, 4]
+    assert all(r["rank"] == pytest.approx(1 / 4, abs=1e-15) for r in rows)
+
+
 def test_link_prediction_matches_bruteforce_on_random_graph(spark):
     """Exhaustive check on a seeded random graph: every (unlinked
     pair, common-neighbor count, Jaccard) must equal a networkx-free

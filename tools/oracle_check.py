@@ -1,9 +1,10 @@
-"""Local replica of the driver's correctness gate.
+"""The DuckDB oracle gate.
 
-Runs every __spark_entry__.queries() entry on Spark and its
-oracle_sql() on DuckDB over the same parquet tables, then compares
-row count, schema (column names), and an order-insensitive value
-hash (rows sorted by all columns, values canonicalized).
+Runs every registered query on Spark and its oracle SQL on DuckDB
+over the same parquet tables, then compares row count, schema
+(column names), and an order-insensitive value hash (rows sorted by
+all columns, values canonicalized). Tier-1 runs the same per-query
+check (check_query) at sf0.001; this CLI covers other scales.
 
 Usage: python tools/oracle_check.py [sf_dir] [query_name ...]
 """
@@ -50,6 +51,47 @@ def canonical(df: pd.DataFrame) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
+def open_oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table in sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check_query(df, con: duckdb.DuckDBPyConnection, oracle_sql: str) -> tuple[int, list[str]]:
+    """The gate's three checks on one built query DataFrame against its
+    DuckDB oracle: row count, column set and canonical value hash.
+
+    An Observation rides the collect job, so the JVM-side row count is
+    checked against BOTH the Arrow-collected frame and the oracle: a
+    partial collect cannot pass as a matching row count. Returns the
+    collected row count and the problems found (empty when the query
+    passes); Spark and DuckDB errors propagate."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation(f"gate_{time.time_ns()}")
+    sdf = df.observe(obs, F.count(F.lit(1)).alias("n_rows")).toPandas()
+    observed = int(obs.get["n_rows"])
+    odf = con.execute(oracle_sql).fetchdf()
+    problems = []
+    if observed != len(sdf):
+        problems.append(f"observed {observed} vs collected {len(sdf)}")
+    if len(sdf) != len(odf):
+        problems.append(f"rows {len(sdf)} vs {len(odf)}")
+    ks = sorted(sdf.columns)
+    if ks != sorted(odf.columns):
+        problems.append(f"cols {ks} vs {sorted(odf.columns)}")
+    elif canonical(sdf) != canonical(odf):
+        problems.append("value hash mismatch")
+    if problems:
+        problems.append(f"spark: {sdf.reindex(ks, axis=1).head(3).to_dict('records')}")
+        if ks == sorted(odf.columns):
+            problems.append(f"duck: {odf.reindex(ks, axis=1).head(3).to_dict('records')}")
+    return len(sdf), problems
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if not os.path.isdir(a)]
@@ -61,74 +103,25 @@ def main() -> None:
     # literals instead of false-mismatching frozen sf0.01 ones.
     os.environ["DOT_SPARK_GATE_SF_DIR"] = sf_dir
 
-    import __spark_entry__ as entrymod
     from dot_spark import get_spark
+    from dot_spark.queries import ORACLE, QUERIES
 
     spark = get_spark("oracle_check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    names = only or list(qs)
-    passed = failed = skipped = 0
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
+    con = open_oracle_db(sf_dir)
+    names = only or list(QUERIES)
+    failed = 0
     for name in names:
         t0 = time.time()
         try:
-            # second-channel row accounting (the write_observed
-            # discipline, loads.py): an Observation rides the collect
-            # job, so the JVM-side aggregated count is checked against
-            # BOTH the arrow-collected frame and the oracle — a
-            # partial/dropped-batch collect can no longer masquerade
-            # as a passing row count.
-            obs = Observation(f"gate_{name}_{time.time_ns()}")
-            sdf = (
-                qs[name](spark, sf_dir)
-                .observe(obs, F.count(F.lit(1)).alias("n_rows"))
-                .toPandas()
-            )
-            observed = int(obs.get["n_rows"])
+            rows, problems = check_query(QUERIES[name](spark, sf_dir), con, ORACLE[name])
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failed += 1
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-            skipped += 1
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failed += 1
-            continue
-        problems = []
-        if observed != len(sdf):
-            problems.append(f"observed {observed} vs collected {len(sdf)}")
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        elif canonical(sdf) != canonical(odf):
-            problems.append("value hash mismatch")
+            rows, problems = 0, [f"{type(e).__name__}: {e}"]
         if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
-            ks = sorted(sdf.columns)
-            print("  spark:", sdf.reindex(ks, axis=1).head(3).to_dict("records"))
-            if sorted(odf.columns) == ks:
-                print("  duck: ", odf.reindex(ks, axis=1).head(3).to_dict("records"))
+            print(f"FAIL {name}: " + "\n  ".join(problems))
             failed += 1
         else:
-            print(
-                f"PASS {name} ({len(sdf)} rows, observed {observed}, "
-                f"{time.time()-t0:.1f}s)"
-            )
-            passed += 1
-    print(f"\n{passed} passed, {failed} failed, {skipped} rows-only, of {len(names)}")
+            print(f"PASS {name} ({rows} rows, {time.time()-t0:.1f}s)")
+    print(f"\n{len(names) - failed} passed, {failed} failed, of {len(names)}")
     if failed:
         sys.exit(1)
 

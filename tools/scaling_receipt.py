@@ -141,6 +141,11 @@ def main() -> None:
                  "-n", str(n), *names],
                 capture_output=True, text=True, env=env, timeout=3600,
             )
+            if out.returncode != 0:
+                raise RuntimeError(
+                    f"solo_time.py at cpus={cpus} exited {out.returncode}:\n"
+                    f"{out.stderr[-2000:]}"
+                )
             line = out.stdout.strip().splitlines()[-1]
             result["per_cpus"][str(cpus)] = json.loads(line)
             print(f"cpus={cpus}: {line}")
