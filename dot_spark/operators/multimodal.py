@@ -34,7 +34,9 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -75,10 +77,9 @@ def synthesize_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     payload = F.unhex(F.sha2(F.col(text_col).cast("binary"), 256))
     # the payloads feed per-row Python feature extractors downstream:
     # spread the one-split local scan so those stages run full-width
-    # (no-op at warehouse scale — see the mapInPandas synthesizers).
+    # (no-op at warehouse scale — see _media_table).
     # Projected to the two consumed columns FIRST so the spread
-    # exchange never ships unused document columns (r15, from the
-    # r14 ADVICE: guide §2.3 "project before the exchange").
+    # exchange never ships unused document columns.
     df = spread_small_input(df.select(id_col, text_col))
     return df.select(
         F.col(id_col).alias("media_id"),
@@ -109,9 +110,6 @@ _PNG_ADAM7 = (
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + ctype
@@ -198,9 +196,6 @@ def _png_encode(
     `palette` (n, 3). The fixture generator for the full decoder
     below; filter bytes are computed from the raw pixels by the
     spec's forward filters, so decode must invert them exactly."""
-    import struct
-    import zlib
-
     arr = np.asarray(planes)
     if arr.ndim == 2:
         arr = arr[:, :, None]
@@ -248,8 +243,8 @@ def _png_encode(
 
 def _png_bytes(width: int, height: int, seed: int) -> bytes:
     """Encode a real grayscale 8-bit PNG (deterministic pixel field
-    keyed off `seed`). Delegates to the general encoder with filter 0
-    rows — byte-identical to the pre-r14 hand-rolled gray8 output."""
+    keyed off `seed`) through the general encoder with filter 0
+    rows."""
     x = np.arange(width)[None, :]
     y = np.arange(height)[:, None]
     return _png_encode(((x * 7 + y * 13 + seed) % 256).astype(np.uint8), 0)
@@ -263,9 +258,6 @@ def _png_walk(data: bytes) -> tuple[dict, bytes | None, bytes]:
     other. Returns (ihdr dict, PLTE bytes or None, decompressed
     scanline stream incl. per-row filter bytes); raises ValueError on
     a non-PNG, a malformed IHDR, or an IDAT that does not inflate."""
-    import struct
-    import zlib
-
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     pos, ihdr, plte, idat = 8, None, None, b""
@@ -303,8 +295,8 @@ def _png_walk(data: bytes) -> tuple[dict, bytes | None, bytes]:
 
 
 def _png_decode_full(data: bytes) -> np.ndarray:
-    """REAL PNG decode (r14: the full codec surface, not just the
-    gray8/filter-0 fixture shape): scanline filter reconstruction
+    """REAL PNG decode over the full codec surface: scanline filter
+    reconstruction
     (None/Sub/Up/Average/Paeth), all five 8-bit color types — gray,
     RGB, palette (expanded through PLTE), gray+alpha, RGBA — and
     Adam7 interlacing. Returns (h, w) uint8 for grayscale or
@@ -375,7 +367,7 @@ def _decode_png(data: bytes) -> dict:
     expanded, interlace reassembled), so a truncated/corrupt payload
     fails here rather than passing on header trust. n_bytes = decoded
     SAMPLES (pixels x channels after palette expansion) — w*h for the
-    gray fixture class, matching the pre-r14 contract."""
+    gray fixture class."""
     px = _png_decode_full(data)
     h, w = px.shape[:2]
     return {
@@ -403,8 +395,6 @@ def _avi_bytes(
       with c == 0 stay flat, so the DC-only class remains covered.
     The decoder below re-derives dims and frame count from the actual
     container/codestream structure in both cases."""
-    import struct
-
     mjpg = codec == "mjpg"
     frame_size = width * height * (1 if mjpg else 3)
 
@@ -449,7 +439,7 @@ def _avi_bytes(
                 _jpeg_bytes(
                     width,
                     height,
-                    (seed + f * 11) % 128 + 64,  # clamp-free gray level
+                    ((seed + f * 11) % 128 + 64,),  # clamp-free gray level
                     ac44=(seed + f * 7) % 10,
                 ),
             )
@@ -481,8 +471,6 @@ def _avi_walk(data: bytes) -> dict:
     raise, or trip the mixed-codec check, on valid input). Frame
     magic is only the fallback for containers lacking any stream
     header."""
-    import struct
-
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI")
     width = height = declared_frames = usec_per_frame = None
@@ -593,14 +581,12 @@ _JPEG_ZIGZAG = [
 
 
 def _jpeg_bit_writer():
-    """MSB-first accumulating bit writer shared by the four JPEG
-    fixture encoders (r15 optimization round, guide §1.2 step 2: the
-    former one-int-per-BIT list + per-byte Python sum was half of an
-    mm-family synthesis pass — encode cost measured ≈ decode cost).
-    Identical emission semantics: ``put(v, n)`` appends the bottom n
-    bits of v MSB-first; ``flush()`` pads to the byte boundary with
-    1s per T.81, returns the byte-stuffed segment (FF -> FF 00) and
-    resets for the next segment."""
+    """MSB-first accumulating bit writer shared by the JPEG fixture
+    encoders (a one-int-per-bit list plus a per-byte Python sum was
+    measured at half of an mm-family synthesis pass). ``put(v, n)``
+    appends the bottom n bits of v MSB-first; ``flush()`` pads to the
+    byte boundary with 1s per T.81, returns the byte-stuffed segment
+    (FF -> FF 00) and resets for the next segment."""
     state = [0, 0]  # acc (bottom `nbits` unemitted bits), nbits
     buf = bytearray()
 
@@ -625,292 +611,162 @@ def _jpeg_bit_writer():
     return put, flush
 
 
-def _jpeg_bytes(
-    width: int, height: int, gray: int, ac44: int = 0, extended: bool = False
-) -> bytes:
-    """Encode a REAL baseline JPEG (stdlib-only). Spec-valid JFIF:
-    quant table, SOF0 dims, custom canonical Huffman tables, and a
-    correct entropy stream for the two-coefficient block class
-    {DC = gray-128, quantized (4,4) coefficient = ac44}.
-    ``extended`` emits the frame as SOF1 (extended sequential DCT):
-    at 8-bit precision the scan machinery is IDENTICAL to baseline —
-    SOF1 only widens the allowed precision/table ids — so the same
-    closed-form oracle pins both markers:
+def seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: marker, big-endian length (body + 2), body."""
+    return struct.pack(">HH", marker, len(body) + 2) + body
 
-    - ac44 == 0: a flat gray field (DC-only MCUs).
-    - ac44 in 1..9: every MCU additionally carries AC coefficient
-      (4,4), whose entropy coding exercises the full baseline scan
-      machinery — two ZRL (0xF0) runs to reach zigzag position 39,
-      a (run=6, size) symbol, magnitude bits, then EOB. The decoded
-      pixel field is EXACTLY gray + 2*ac44*s(x%8)*s(y%8) with
-      s = [+,-,-,+,+,-,-,+]: the (4,4) basis product is ±1/8 per
-      pixel, so dequantized 16*ac44 contributes the exact integer
-      ±2*ac44 — a closed form an independent oracle can recompute
-      without running any DCT.
-    """
-    import struct
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
+# quant table 0: Q[0]=8 so quantized DC == level-128 exactly; rest 16
+# (zigzag pos 39 = (4,4) -> dequantized coefficient 16*ac44)
+_JPEG_DQT = seg(0xFFDB, b"\x00" + bytes([8] + [16] * 63))
 
-    if not 0 <= ac44 <= 9:
-        raise ValueError("ac44 must be in 0..9 (keeps pixels clamp-free)")
-    # quant: Q[0]=8 so quantized DC == gray-128 exactly; rest flat 16
-    # (zigzag pos 39 = (4,4) -> dequantized coefficient 16*ac44)
-    dqt = seg(0xFFDB, b"\x00" + bytes([8] + [16] * 63))
-    sof0 = seg(
-        0xFFC1 if extended else 0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
+
+def _jpeg_huff_table(symbols: bytes) -> bytes:
+    """DHT table body giving every symbol a 4-bit canonical code:
+    symbol i encodes as the 4-bit value i."""
+    return bytes([0, 0, 0, len(symbols)] + [0] * 12) + symbols
+
+
+# DC table: categories 0-11, so category c encodes as the 4-bit value c
+_JPEG_DC_TABLE = _jpeg_huff_table(bytes(range(12)))
+
+
+def _jpeg_sof(marker: int, width: int, height: int, sampling: list[int]) -> bytes:
+    """Frame header for components 1..n, all on quant table 0;
+    ``sampling`` holds each component's (H << 4 | V) byte."""
+    return seg(
+        marker,
+        struct.pack(">BHHB", 8, height, width, len(sampling))
+        + b"".join(bytes([cid, hv, 0]) for cid, hv in enumerate(sampling, 1)),
     )
-    # DC table 0: 12 symbols (categories 0-11), all 4-bit canonical ->
-    # category c encodes as the 4-bit value c. AC table 0: six 4-bit
-    # canonical symbols [EOB, ZRL, (6,1), (6,2), (6,3), (6,4)] ->
-    # symbol i encodes as the 4-bit value i.
-    dht_dc = seg(0xFFC4, b"\x00" + bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12)))
-    ac_syms = bytes([0x00, 0xF0, 0x61, 0x62, 0x63, 0x64])
-    dht_ac = seg(0xFFC4, b"\x10" + bytes([0, 0, 0, len(ac_syms)] + [0] * 12) + ac_syms)
-    sos = seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
-
-    n_mcus = ((width + 7) // 8) * ((height + 7) // 8)
-    d = gray - 128  # quantized DC of the first MCU; diffs after are 0
-    put, flush = _jpeg_bit_writer()
-
-    ac_code = {s: i for i, s in enumerate(ac_syms)}  # canonical 4-bit
-
-    def put_block(dc_diff: int) -> None:
-        cat = abs(dc_diff).bit_length()
-        put(cat, 4)  # DC category code (canonical: category == code)
-        if cat:  # magnitude bits, JPEG one's-complement convention
-            put(dc_diff if dc_diff >= 0 else dc_diff + (1 << cat) - 1, cat)
-        if ac44:
-            put(ac_code[0xF0], 4)  # ZRL: 16 zeros (scan pos 1-16)
-            put(ac_code[0xF0], 4)  # ZRL: 16 zeros (scan pos 17-32)
-            size = ac44.bit_length()
-            put(ac_code[0x60 | size], 4)  # run 6 (pos 33-38), then (4,4)
-            put(ac44, size)  # positive magnitude bits
-        put(ac_code[0x00], 4)  # EOB
-
-    put_block(d)
-    for _ in range(n_mcus - 1):
-        put_block(0)
-    entropy = flush()
-    return b"\xff\xd8" + dqt + sof0 + dht_dc + dht_ac + sos + entropy + b"\xff\xd9"
 
 
-def _jpeg_color_bytes(
+def _jpeg_dht(ac_table: bytes, chroma: bool) -> bytes:
+    """One DHT segment: DC/AC tables id 0, plus the same tables again
+    as id 1 for chroma, so the SOS component->table mapping is a real
+    code path, not a constant."""
+    dc = b"\x00" + _JPEG_DC_TABLE + (b"\x01" + _JPEG_DC_TABLE if chroma else b"")
+    return seg(0xFFC4, dc + b"\x10" + ac_table + (b"\x11" + ac_table if chroma else b""))
+
+
+def _jpeg_sos(cids, ss: int, se: int, ahal: int) -> bytes:
+    """Scan header: components 1 and 4 on table id 0 (luma; K rides
+    the luma tables as in libjpeg's YCCK layout), 2 and 3 on id 1."""
+    sel = b"".join(bytes([cid, 0 if cid in (1, 4) else 0x11]) for cid in cids)
+    return seg(0xFFDA, bytes([len(cids)]) + sel + bytes([ss, se, ahal]))
+
+
+def _jpeg_put_dc(put, diff: int) -> None:
+    """DC category code (canonical: category == code), then the
+    magnitude bits in JPEG's one's-complement convention."""
+    cat = abs(diff).bit_length()
+    put(cat, 4)
+    if cat:
+        put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+
+
+def _jpeg_put_ac44(put, ac_code: dict[int, int], value: int) -> None:
+    """The lone positive AC coefficient at zigzag 39 = (4,4): two ZRL
+    runs (scan pos 1-32), a (run 6, size) symbol (33-38), then the
+    magnitude bits."""
+    put(ac_code[0xF0], 4)
+    put(ac_code[0xF0], 4)
+    size = value.bit_length()
+    put(ac_code[0x60 | size], 4)
+    put(value, size)
+
+
+def _jpeg_bytes(
     width: int,
     height: int,
-    y0: int,
-    cb0: int,
-    cr0: int,
+    levels: tuple[int, ...],
     ac44: int = 0,
-    subsample: str = "4:2:0",
+    subsample: str = "4:4:4",
     restart_interval: int = 0,
+    extended: bool = False,
+    transform: int | None = None,
 ) -> bytes:
-    """Encode a REAL interleaved 3-component (YCbCr) baseline JPEG,
-    stdlib-only — the color twin of _jpeg_bytes. Spec-valid JFIF:
-    SOF0 with per-component sampling factors (4:2:0 = Y 2x2 +
-    Cb/Cr 1x1, or 4:4:4 = all 1x1), SEPARATE Huffman table ids for
-    luma (0) and chroma (1) so a decoder must honor the SOS Td/Ta
-    component mapping, and an interleaved MCU entropy stream with
-    per-component DC predictors.
+    """Encode a REAL sequential-DCT JPEG (stdlib-only): quant table,
+    SOF0 dims (SOF1 when ``extended`` — at 8-bit precision the scan
+    machinery is identical, SOF1 only widens the allowed precision and
+    table ids), canonical Huffman tables and an interleaved entropy
+    stream with per-component DC predictors.
 
-    Content is the closed-form class an independent oracle can
-    recompute without running a DCT: Cb/Cr are FLAT fields (cb0/cr0
-    — so chroma upsampling is value-invariant and 4:2:0 and 4:4:4
-    payloads decode to identical pixels), and Y carries the
-    _jpeg_bytes pattern y0 + 2*ac44*s(x%8)*s(y%8) with
-    s = [+,-,-,+,+,-,-,+] (AC(4,4) rides every Y block, entropy-coded
-    through ZRL/run machinery inside the interleaved scan).
+    ``levels`` holds one DC level per component: 1 = grayscale, 3 =
+    YCbCr, 4 = Adobe CMYK/YCCK. Every block is the two-coefficient
+    class {DC = level - 128, quantized (4,4) coefficient = ac44 on
+    component 1, 0 elsewhere}. ac44 in 1..9 exercises the full scan
+    machinery — two ZRL runs to reach zigzag position 39, a
+    (run=6, size) symbol, magnitude bits, then EOB — and the decoded
+    field is EXACTLY level + 2*ac44*s(x%8)*s(y%8) with
+    s = [+,-,-,+,+,-,-,+]: the (4,4) basis product is ±1/8 per
+    pixel, so dequantized 16*ac44 contributes the exact integer
+    ±2*ac44 — a closed form an independent oracle can recompute
+    without running any DCT. The one-component stream writes its DC
+    and AC tables as two DHT segments, which keeps the decoder's
+    multi-segment path covered.
 
-    ``restart_interval`` > 0 emits a DRI segment and RST0-7 markers
-    every that-many MCUs (bit-padded to byte alignment, DC
-    predictors reset — what camera/libjpeg output does for error
-    resilience). Restarts never change decoded pixels, so the same
-    closed-form oracle pins the restart decode path.
+    ``subsample`` '4:2:0' samples component 1 at 2x2 (four Y blocks
+    per MCU) in multi-component streams; flat chroma makes that
+    value-invariant, so 4:2:0 and 4:4:4 payloads decode to identical
+    pixels. ``restart_interval`` > 0 emits a DRI segment and RST0-7
+    markers every that-many MCUs (bit-padded to byte alignment, DC
+    predictors reset); restarts never change decoded pixels.
+    ``transform`` (0 = direct CMYK, 2 = YCCK) emits an Adobe APP14
+    segment; 4-component streams follow Adobe's INVERTED-ink
+    convention (stored 255 = no ink), so the decoder's composite is
+    channel * K / 255.
     """
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
+    n = len(levels)
+    if n not in (1, 3, 4):
+        raise ValueError("levels must hold 1, 3 or 4 component DC levels")
     if not 0 <= ac44 <= 9:
         raise ValueError("ac44 must be in 0..9 (keeps pixels clamp-free)")
     if subsample not in ("4:2:0", "4:4:4"):
         raise ValueError("subsample must be '4:2:0' or '4:4:4'")
-    hy = vy = 2 if subsample == "4:2:0" else 1
-    # quant table 0: Q[0]=8 so quantized DC == value-128 exactly;
-    # rest 16 (zigzag 39 = (4,4) -> dequantized coefficient 16*ac44)
-    dqt = seg(0xFFDB, b"\x00" + bytes([8] + [16] * 63))
-    sof0 = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, hy << 4 | vy, 0])  # Y: sampling (hy, vy), qtab 0
-        + bytes([2, 0x11, 0])  # Cb: 1x1, qtab 0
-        + bytes([3, 0x11, 0]),  # Cr: 1x1, qtab 0
+    if transform not in (None, 0, 2):
+        raise ValueError("transform must be 0 (CMYK) or 2 (YCCK)")
+    hy = vy = 2 if (n > 1 and subsample == "4:2:0") else 1
+    app14 = (
+        b""
+        if transform is None
+        else seg(0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform))
     )
-    # same canonical tables as _jpeg_bytes, registered TWICE: ids 0
-    # (luma) and 1 (chroma), so the SOS component->table mapping is a
-    # real code path, not a constant
-    dc_body = bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12))
+    sof = _jpeg_sof(
+        0xFFC1 if extended else 0xFFC0, width, height, [hy << 4 | vy] + [0x11] * (n - 1)
+    )
+    # AC table: EOB, ZRL and (run=6, size=1..4) for the (4,4) coefficient
     ac_syms = bytes([0x00, 0xF0, 0x61, 0x62, 0x63, 0x64])
-    ac_body = bytes([0, 0, 0, len(ac_syms)] + [0] * 12) + ac_syms
-    dht = seg(
-        0xFFC4,
-        b"\x00" + dc_body + b"\x01" + dc_body  # DC ids 0, 1
-        + b"\x10" + ac_body + b"\x11" + ac_body,  # AC ids 0, 1
-    )
-    sos = seg(
-        0xFFDA,
-        b"\x03"
-        + bytes([1, 0x00])  # Y  -> DC 0 / AC 0
-        + bytes([2, 0x11])  # Cb -> DC 1 / AC 1
-        + bytes([3, 0x11])  # Cr -> DC 1 / AC 1
-        + b"\x00\x3f\x00",
-    )
+    ac_table = _jpeg_huff_table(ac_syms)
+    if n == 1:
+        dht = seg(0xFFC4, b"\x00" + _JPEG_DC_TABLE) + seg(0xFFC4, b"\x10" + ac_table)
+    else:
+        dht = _jpeg_dht(ac_table, chroma=True)
+    dri = seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+    sos = _jpeg_sos(range(1, n + 1), 0, 63, 0)
 
     put, flush = _jpeg_bit_writer()
-
-    ac_code = {s: i for i, s in enumerate(ac_syms)}  # canonical 4-bit
-
-    def put_block(dc_diff: int, with_ac: bool) -> None:
-        cat = abs(dc_diff).bit_length()
-        put(cat, 4)  # DC category code (canonical: category == code)
-        if cat:  # magnitude bits, JPEG one's-complement convention
-            put(dc_diff if dc_diff >= 0 else dc_diff + (1 << cat) - 1, cat)
-        if with_ac and ac44:
-            put(ac_code[0xF0], 4)  # ZRL: 16 zeros (scan pos 1-16)
-            put(ac_code[0xF0], 4)  # ZRL: 16 zeros (scan pos 17-32)
-            size = ac44.bit_length()
-            put(ac_code[0x60 | size], 4)  # run 6 (pos 33-38), then (4,4)
-            put(ac44, size)  # positive magnitude bits
-        put(ac_code[0x00], 4)  # EOB
-
-    mcus_x = (width + 8 * hy - 1) // (8 * hy)
-    mcus_y = (height + 8 * vy - 1) // (8 * vy)
-    pred = {1: 0, 2: 0, 3: 0}  # per-component DC predictors
-
-    def comp_block(comp: int, dc_value: int, with_ac: bool) -> None:
-        put_block(dc_value - pred[comp], with_ac)
-        pred[comp] = dc_value
-
-    flush_segment = flush
-
+    ac_code = {s: i for i, s in enumerate(ac_syms)}
+    dcs = [v - 128 for v in levels]
+    blocks = [hy * vy] + [1] * (n - 1)  # per MCU, raster order within it
+    n_mcus = ((width + 8 * hy - 1) // (8 * hy)) * ((height + 8 * vy - 1) // (8 * vy))
     entropy = b""
-    n_mcus = mcus_x * mcus_y
+    pred = [0] * n
     for m in range(n_mcus):
         if restart_interval and m and m % restart_interval == 0:
             # close the segment, emit RSTn (n cycles 0-7), reset preds
-            entropy += flush_segment()
-            entropy += bytes(
-                [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-            )
-            pred.update({1: 0, 2: 0, 3: 0})
-        for _ in range(hy * vy):  # Y blocks, raster order in the MCU
-            comp_block(1, y0 - 128, True)
-        comp_block(2, cb0 - 128, False)
-        comp_block(3, cr0 - 128, False)
-    entropy += flush_segment()
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return b"\xff\xd8" + dqt + sof0 + dht + dri + sos + entropy + b"\xff\xd9"
-
-
-def _jpeg_cmyk_bytes(
-    width: int,
-    height: int,
-    c1: int,
-    c2: int,
-    c3: int,
-    k0: int,
-    ac44: int = 0,
-    transform: int = 2,
-) -> bytes:
-    """Encode a REAL 4-component Adobe baseline JPEG (stdlib-only) —
-    the print/Photoshop corpus class: SOF0 with four 1x1 components,
-    an Adobe APP14 segment carrying the color-transform flag, and an
-    interleaved scan with per-component DC predictors.
-
-    ``transform`` = 2 emits YCCK (channel 1 = Y with the _jpeg_bytes
-    AC pattern c1 ± 2*ac44 on the sign grid, channels 2/3 = flat
-    Cb/Cr, channel 4 = flat K); ``transform`` = 0 emits direct CMYK
-    (all four stored as-is, channel 1 carrying the pattern). Both
-    follow Adobe's INVERTED-ink convention (stored 255 = no ink), so
-    the decoder's composite is channel * K / 255 — every value
-    closed-form for the oracle. Channels 1/4 use Huffman table id 0
-    (luma-like per libjpeg YCCK), 2/3 table id 1."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    if not 0 <= ac44 <= 9:
-        raise ValueError("ac44 must be in 0..9 (keeps pixels clamp-free)")
-    if transform not in (0, 2):
-        raise ValueError("transform must be 0 (CMYK) or 2 (YCCK)")
-    dqt = seg(0xFFDB, b"\x00" + bytes([8] + [16] * 63))
-    app14 = seg(0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform))
-    sof0 = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 4)
-        + bytes([1, 0x11, 0])
-        + bytes([2, 0x11, 0])
-        + bytes([3, 0x11, 0])
-        + bytes([4, 0x11, 0]),
-    )
-    dc_body = bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12))
-    ac_syms = bytes([0x00, 0xF0, 0x61, 0x62, 0x63, 0x64])
-    ac_body = bytes([0, 0, 0, len(ac_syms)] + [0] * 12) + ac_syms
-    dht = seg(
-        0xFFC4,
-        b"\x00" + dc_body + b"\x01" + dc_body
-        + b"\x10" + ac_body + b"\x11" + ac_body,
-    )
-    sos = seg(
-        0xFFDA,
-        b"\x04"
-        + bytes([1, 0x00])  # pattern channel -> DC 0 / AC 0
-        + bytes([2, 0x11])
-        + bytes([3, 0x11])
-        + bytes([4, 0x00])  # K -> luma tables (libjpeg YCCK layout)
-        + b"\x00\x3f\x00",
-    )
-
-    put, flush = _jpeg_bit_writer()
-
-    ac_code = {s: i for i, s in enumerate(ac_syms)}
-
-    def put_block(dc_diff: int, with_ac: bool) -> None:
-        cat = abs(dc_diff).bit_length()
-        put(cat, 4)
-        if cat:
-            put(dc_diff if dc_diff >= 0 else dc_diff + (1 << cat) - 1, cat)
-        if with_ac and ac44:
-            put(ac_code[0xF0], 4)
-            put(ac_code[0xF0], 4)
-            size = ac44.bit_length()
-            put(ac_code[0x60 | size], 4)
-            put(ac44, size)
-        put(ac_code[0x00], 4)
-
-    pred = {1: 0, 2: 0, 3: 0, 4: 0}
-
-    def comp_block(comp: int, dc_value: int, with_ac: bool) -> None:
-        put_block(dc_value - pred[comp], with_ac)
-        pred[comp] = dc_value
-
-    n_mcus = ((width + 7) // 8) * ((height + 7) // 8)
-    for _ in range(n_mcus):
-        comp_block(1, c1 - 128, True)
-        comp_block(2, c2 - 128, False)
-        comp_block(3, c3 - 128, False)
-        comp_block(4, k0 - 128, False)
-    entropy = flush()
+            entropy += flush() + bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
+            pred = [0] * n
+        for c in range(n):
+            for _ in range(blocks[c]):
+                _jpeg_put_dc(put, dcs[c] - pred[c])
+                pred[c] = dcs[c]
+                if c == 0 and ac44:
+                    _jpeg_put_ac44(put, ac_code, ac44)
+                put(ac_code[0x00], 4)  # EOB
+    entropy += flush()
     return (
-        b"\xff\xd8" + app14 + dqt + sof0 + dht + sos + entropy + b"\xff\xd9"
+        b"\xff\xd8" + app14 + _JPEG_DQT + sof + dht + dri + sos + entropy + b"\xff\xd9"
     )
 
 
@@ -926,10 +782,10 @@ def _progressive_jpeg_bytes(
     """Encode a REAL decodable PROGRESSIVE JPEG (SOF2), stdlib-only —
     the multi-scan successive-approximation stream a real progressive
     encoder (libjpeg -progressive) emits, carrying the SAME
-    closed-form pixel content as the baseline twins (_jpeg_bytes /
-    _jpeg_color_bytes): DC = gray-128, quantized AC(4,4) = ac44, so
-    decoded pixels are exactly gray + 2*ac44*s(x%8)*s(y%8). The scan
-    script exercises every progressive decode path:
+    closed-form pixel content as the sequential encoder _jpeg_bytes:
+    DC = gray-128, quantized AC(4,4) = ac44, so decoded pixels are
+    exactly gray + 2*ac44*s(x%8)*s(y%8). The scan script exercises
+    every progressive decode path:
 
     1. DC first scan (Ss=0 Se=0 Ah=0 Al=1): Huffman-coded diffs of
        the arithmetically right-shifted DC — interleaved across all
@@ -948,8 +804,8 @@ def _progressive_jpeg_bytes(
 
     ``color`` = (cb0, cr0) emits a 3-component stream with FLAT
     chroma (separate luma/chroma table ids, per-component DC
-    predictors) whose decoded pixels are identical to the baseline
-    color twin — one closed-form oracle pins both codec paths.
+    predictors) whose decoded pixels are identical to the sequential
+    3-component stream — one closed-form oracle pins both codec paths.
     ``subsample`` ('4:4:4' or '4:2:0') sets the Y sampling factors:
     4:2:0 interleaves four Y blocks per MCU in the DC scans while
     the non-interleaved AC scans cover each component's own ceil
@@ -963,75 +819,37 @@ def _progressive_jpeg_bytes(
     straddles a restart — restarts never change pixels, so the same
     closed-form oracle pins both layouts.
     """
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
     if not 0 <= ac44 <= 9:
         raise ValueError("ac44 must be in 0..9 (keeps pixels clamp-free)")
     if subsample not in ("4:4:4", "4:2:0"):
         raise ValueError("subsample must be '4:4:4' or '4:2:0'")
     hy = vy = 2 if (color is not None and subsample == "4:2:0") else 1
-    dqt = seg(0xFFDB, b"\x00" + bytes([8] + [16] * 63))
     # (cid, dc, ac, hs, vs)
     comps = [(1, gray - 128, ac44, hy, vy)]
     if color is not None:
         cb0, cr0 = color
         comps += [(2, cb0 - 128, 0, 1, 1), (3, cr0 - 128, 0, 1, 1)]
-    sof2 = seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, height, width, len(comps))
-        + b"".join(
-            bytes([cid, (hs << 4) | vs, 0]) for cid, _, _, hs, vs in comps
-        ),
-    )
-    # DC table: 12 4-bit canonical category codes. AC table: 4-bit
-    # canonical symbols — EOB0-EOB5 (EOBRUN up to 63 blocks), ZRL,
-    # and (run=6, size=1..4) for the AC(4,4) coefficient.
-    dc_body = bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12))
+    sof2 = _jpeg_sof(0xFFC2, width, height, [(hs << 4) | vs for *_, hs, vs in comps])
+    # AC table: EOB0-EOB5 (EOBRUN up to 63 blocks), ZRL, and
+    # (run=6, size=1..4) for the AC(4,4) coefficient.
     ac_syms = bytes(
         [0x00, 0x10, 0x20, 0x30, 0x40, 0x50, 0xF0, 0x61, 0x62, 0x63, 0x64]
     )
-    ac_body = bytes([0, 0, 0, len(ac_syms)] + [0] * 12) + ac_syms
-    if color is None:
-        dht = seg(0xFFC4, b"\x00" + dc_body + b"\x10" + ac_body)
-    else:
-        dht = seg(
-            0xFFC4,
-            b"\x00" + dc_body + b"\x01" + dc_body
-            + b"\x10" + ac_body + b"\x11" + ac_body,
-        )
     ac_code = {s: i for i, s in enumerate(ac_syms)}
 
     put, flush = _jpeg_bit_writer()
 
-    def put_dc_diff(diff: int) -> None:
-        cat = abs(diff).bit_length()
-        put(cat, 4)  # canonical: category == 4-bit code
-        if cat:
-            put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-
-    hmax = max(hs for _, _, _, hs, _ in comps)
-    vmax = max(vs for _, _, _, _, vs in comps)
-    n_mcus = ((width + 8 * hmax - 1) // (8 * hmax)) * (
-        (height + 8 * vmax - 1) // (8 * vmax)
-    )
+    # component 1 carries the largest sampling factors (hy, vy)
+    n_mcus = ((width + 8 * hy - 1) // (8 * hy)) * ((height + 8 * vy - 1) // (8 * vy))
 
     def comp_blocks(hs: int, vs: int) -> int:
         # non-interleaved scans cover the component's own ceil grid
-        return (
-            (width * hs + 8 * hmax - 1) // (8 * hmax)
-        ) * ((height * vs + 8 * vmax - 1) // (8 * vmax))
+        return ((width * hs + 8 * hy - 1) // (8 * hy)) * (
+            (height * vs + 8 * vy - 1) // (8 * vy)
+        )
 
-    def sos_header(scan_comps: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        body = bytes([len(scan_comps)])
-        for cid in scan_comps:
-            t = 0 if cid == 1 else 1  # luma tables 0, chroma 1
-            body += bytes([cid, (t << 4) | t])
-        return seg(0xFFDA, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = b"\xff\xd8" + dqt + sof2 + dht
+    out = b"\xff\xd8" + _JPEG_DQT + sof2
+    out += _jpeg_dht(_jpeg_huff_table(ac_syms), chroma=color is not None)
     if restart_interval:
         out += seg(0xFFDD, struct.pack(">H", restart_interval))
 
@@ -1051,7 +869,7 @@ def _progressive_jpeg_bytes(
     # MCU carries hs*vs blocks per component — 4 Y blocks in 4:2:0).
     # Every block of a component has the same DC, so only the first
     # blocks carry nonzero diffs.
-    out += sos_header([c[0] for c in comps], 0, 0, 0, 1)
+    out += _jpeg_sos([c[0] for c in comps], 0, 0, 0x01)
     rst_n = 0
     pred = {cid: 0 for cid, _, _, _, _ in comps}
     for m in range(n_mcus):
@@ -1061,14 +879,14 @@ def _progressive_jpeg_bytes(
         for cid, dc, _, hs, vs in comps:
             for _ in range(hs * vs):
                 v1 = dc >> 1  # arithmetic shift: the Al=1 approximation
-                put_dc_diff(v1 - pred[cid])
+                _jpeg_put_dc(put, v1 - pred[cid])
                 pred[cid] = v1
     out += flush()
 
     # scan 2: DC refinement, Ah=1 Al=0 — one raw bit per block (the
     # restart split applies to every scan of the frame, stateless
     # scans included)
-    out += sos_header([c[0] for c in comps], 0, 0, 1, 0)
+    out += _jpeg_sos([c[0] for c in comps], 0, 0, 0x10)
     rst_n = 0
     for m in range(n_mcus):
         if restart_interval and m and m % restart_interval == 0:
@@ -1117,25 +935,21 @@ def _progressive_jpeg_bytes(
     for cid, _, ac, hs, vs in comps:
         n_blocks = comp_blocks(hs, vs)
         # AC first scan (Al=1), non-interleaved
-        out += sos_header([cid], 1, 63, 0, 1)
+        out += _jpeg_sos([cid], 1, 63, 0x01)
         rst_n = 0
         a1 = ac >> 1
         if a1:
             for m in range(n_blocks):
                 if restart_interval and m and m % restart_interval == 0:
                     out += rst_marker()
-                put(ac_code[0xF0], 4)  # ZRL (zigzag 1-16)
-                put(ac_code[0xF0], 4)  # ZRL (17-32)
-                size = a1.bit_length()
-                put(ac_code[0x60 | size], 4)  # run 6 (33-38) -> pos 39
-                put(a1, size)
+                _jpeg_put_ac44(put, ac_code, a1)
                 put(ac_code[0x00], 4)  # EOB0: just this block
         else:
             out += chunked_eobrun(n_blocks, [])
         out += flush()
 
         # AC refinement scan (Ah=1 Al=0), non-interleaved
-        out += sos_header([cid], 1, 63, 1, 0)
+        out += _jpeg_sos([cid], 1, 63, 0x10)
         rst_n = 0
         if ac == 1:
             # newly significant at zigzag 39: runs in refinement
@@ -1143,10 +957,8 @@ def _progressive_jpeg_bytes(
             for m in range(n_blocks):
                 if restart_interval and m and m % restart_interval == 0:
                     out += rst_marker()
-                put(ac_code[0xF0], 4)
-                put(ac_code[0xF0], 4)
-                put(ac_code[0x61], 4)  # (run 6, size 1)
-                put(1, 1)  # sign bit: positive
+                # ZRL, ZRL, (run 6, size 1), then the positive sign bit
+                _jpeg_put_ac44(put, ac_code, 1)
                 put(ac_code[0x00], 4)  # EOB0, no pending bits
         elif ac >= 2:
             # already significant: the low bit is a correction bit
@@ -1164,8 +976,6 @@ def _parse_jpeg(data: bytes) -> dict:
     and component count from the actual codestream (not trusted
     metadata). Entropy-coded pixel reconstruction is left to a real
     codec (pyav) — what's verified here is everything structural."""
-    import struct
-
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     pos, dims, saw_sos = 2, None, False
@@ -1265,8 +1075,8 @@ def _huff_fast(table: dict[tuple[int, int], int]):
 def _huff_fast_cached(cache: dict, table: dict) -> tuple:
     """Per-decode memo around _huff_fast: one progressive stream
     references the same canonical table from several scans (and a
-    color baseline frame from several components), and the r15
-    profile showed the 256-entry LUT rebuild was a fixed per-image
+    color baseline frame from several components), and a profile
+    showed the 256-entry LUT rebuild was a fixed per-image
     cost on the small-image corpus classes. Keyed on the table
     OBJECT (identity-checked, with the table kept referenced so a
     gc'd dict can never alias a reused id) — a redefined table
@@ -1286,9 +1096,8 @@ _BIT_MASKS = tuple((1 << i) - 1 for i in range(32))
 def _bit_reader(initial: bytes):
     """Rolling-buffer MSB-first bit reader over a destuffed entropy
     segment — the shared fast path under both JPEG entropy decoders
-    (r14 optimization round, guide §1.2 step 2 "per-task work": the
-    former per-bit closure calls were ~60% of a corpus decode pass;
-    a refill-by-byte accumulator reads a multi-bit value in O(1)
+    (per-bit closure calls measured ~60% of a corpus decode pass; a
+    refill-by-byte accumulator reads a multi-bit value in O(1)
     small-int ops with IDENTICAL truncation semantics — a read past
     the segment end raises the same ValueError at the same consumed
     position, and `tell` reports exact consumed/total bit counts for
@@ -1351,9 +1160,9 @@ def _bit_reader(initial: bytes):
         if navail < 8:
             # LUT miss on a zero-padded tail window: the walk below
             # would only ever reach read_bits(1)'s truncated raise
-            # after driving navail negative — raise it directly (r15,
-            # from the r14 ADVICE; same exception, same consumed
-            # position, no negative bit count in between)
+            # after driving navail negative — raise it directly (same
+            # exception, same consumed position, no negative bit
+            # count in between)
             raise ValueError("JPEG entropy stream truncated")
         # > 8-bit code or invalid prefix: consume the window and walk
         # lengths 9..16 bit by bit (rare path)
@@ -1383,9 +1192,9 @@ def _idct_matrix() -> np.ndarray:
     return A
 
 
-# the 8x8 basis is a constant — built once at import (r15: the
-# per-image rebuild was a measured fixed cost on the small-image
-# corpus classes; trig on 64 cells is pure overhead per decode)
+# the 8x8 basis is a constant — built once at import (a per-image
+# rebuild was a measured fixed cost on the small-image corpus
+# classes; trig on 64 cells is pure overhead per decode)
 _IDCT_A = _idct_matrix()
 _IDCT_AT = _IDCT_A.T.copy()
 
@@ -1420,7 +1229,7 @@ def _planes_to_pixels(
     """Crop/upsample decoded component planes to final pixels: the
     (h, w) grid for 1 component; chroma upsampling by sample
     replication + the fixed-point YCbCr->RGB transform for 3; the
-    Adobe 4-component path (r14) for CMYK/YCCK — transform 2 runs
+    Adobe 4-component path for CMYK/YCCK — transform 2 runs
     the YCbCr transform on the first three channels, transform 0
     takes them directly, and both composite against the K channel
     with Adobe's INVERTED-ink convention, channel * K rounded at
@@ -1465,9 +1274,9 @@ def _jpeg_decode_baseline(data: bytes) -> np.ndarray:
     level shift, clamp, MCU assembly, crop.
 
     Grayscale (1 component) returns the (h, w) pixel grid.
-    THREE-component YCbCr (the color class — r12 verdict task 6)
-    decodes the interleaved scan with per-component sampling factors
-    (4:4:4 and subsampled 4:2:0/4:2:2 alike), per-component DC
+    THREE-component YCbCr (the color class) decodes the interleaved
+    scan with per-component sampling factors (4:4:4 and subsampled
+    4:2:0/4:2:2 alike), per-component DC
     predictors and SOS-mapped table ids, upsamples chroma by sample
     replication, and converts to RGB (h, w, 3) with the fixed-point
     JFIF transform at 10^-6 precision (libjpeg-style integer
@@ -1480,15 +1289,14 @@ def _jpeg_decode_baseline(data: bytes) -> np.ndarray:
     split on the unstuffed marker bytes, byte re-alignment and DC
     predictor reset per segment — the camera/libjpeg error-resilience
     layout), SOF1 (extended sequential) frames decode on the same
-    path at 8-bit precision (r14), and Adobe 4-component CMYK/YCCK
+    path at 8-bit precision, and Adobe 4-component CMYK/YCCK
     frames decode through the APP14 transform flag + inverted-ink K
-    composite (r14, _planes_to_pixels). Still out of scope (raise,
+    composite (_planes_to_pixels). Still out of scope (raise,
     and decode_media error-accounts): progressive SOF2 (routed to
     the progressive decoder upstream), 12-bit SOF1, lossless SOF3,
     4-component streams with no APP14 transform, component counts
     other than 1/3/4."""
     import re as _re
-    import struct
 
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
@@ -1574,11 +1382,10 @@ def _jpeg_decode_baseline(data: bytes) -> np.ndarray:
     # space as plain Python lists (one [0]*64 per block) — no numpy
     # scalar traffic inside the bit loop; dezigzag + dequantize +
     # IDCT run ONCE per component as the same batched matmul the
-    # progressive decoder uses (r14 optimization round: the per-block
-    # A.T @ coef @ A + clip/round numpy calls were ~40% of a baseline
-    # decode; both formulations are pinned to the same closed-form
-    # pixel oracles and verified byte-identical over every fixture
-    # class).
+    # progressive decoder uses (the per-block A.T @ coef @ A +
+    # clip/round numpy calls were ~40% of a baseline decode; both
+    # formulations are pinned to the same closed-form pixel oracles
+    # and verified byte-identical over every fixture class).
     grids: dict[int, list[list[list[int] | None]]] = {
         cid: [[None] * (mcus_x * hs) for _ in range(mcus_y * vs)]
         for cid, hs, vs, _ in comps
@@ -1593,10 +1400,9 @@ def _jpeg_decode_baseline(data: bytes) -> np.ndarray:
             _huff_fast_cached(fcache, huff[(1, ta)]),
         )
 
-    # Entropy pass with the bit machinery INLINED as loop locals (r15
-    # optimization round, guide §1.2 step 2 / §4.2: the r14 profile
-    # showed the per-coefficient closure calls into _bit_reader were
-    # the remaining majority of a decode pass; locals-based refill +
+    # Entropy pass with the bit machinery INLINED as loop locals (a
+    # profile showed the per-coefficient closure calls into
+    # _bit_reader were the remaining majority of a decode pass; locals-based refill +
     # LUT probe + magnitude extraction in ONE straight-line block
     # removes two Python calls per coefficient with byte-identical
     # semantics — same truncated/invalid errors at the same consumed
@@ -1800,8 +1606,7 @@ def _jpeg_decode_baseline(data: bytes) -> np.ndarray:
 
 
 def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
-    """REAL progressive-JPEG (SOF2) decode — the multi-scan path the
-    r13 verdict named the largest remaining honest codec boundary
+    """REAL progressive-JPEG (SOF2) decode — the multi-scan path
     (~10% of a real web corpus is progressive JPEG): marker walk
     collecting DQT/DHT tables AS THEY APPEAR (tables may be redefined
     between scans), SOF2 dims, then per-scan coefficient
@@ -1826,8 +1631,7 @@ def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
     so the same closed-form oracles pin baseline and progressive
     decodes of the same coefficients to identical pixels.
 
-    Restart markers (r14, closing the last realistic progressive
-    boundary): a nonzero DRI splits every scan's entropy data into
+    Restart markers: a nonzero DRI splits every scan's entropy data into
     independent byte-aligned segments, one per Ri restart units (MCUs
     in interleaved DC scans; single blocks in non-interleaved scans
     per T.81 §G — exactly the baseline decoder's segment semantics).
@@ -1838,8 +1642,6 @@ def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
     Out of scope (raise, and decode_media error-accounts as
     'jpeg-undecodable'): component counts other than 1/3, 16-bit
     quant tables."""
-    import struct
-
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     qtab: dict[int, bytes] = {}
@@ -1930,8 +1732,8 @@ def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
     # grid; padding blocks stay zero and are cropped after IDCT).
     # Grids are plain Python lists (one [0]*64 per block): scans
     # accumulate with small-int ops only — numpy scalar indexing in
-    # the refinement walks was a measured hot spot (r14 optimization
-    # round) — and the batched IDCT converts once at the end.
+    # the refinement walks was a measured hot spot — and the batched
+    # IDCT converts once at the end.
     coefs = {
         cid: [
             [[0] * 64 for _ in range(mcus_x * hs)]
@@ -1977,9 +1779,8 @@ def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
             )
 
             # per-block DC decode, branch hoisted out of the block
-            # loops (r15: dc_block ran once per block with an ah test
-            # per call; ~80 calls per small corpus image was a
-            # measured fixed cost)
+            # loops (an ah test per dc_block call, ~80 calls per small
+            # corpus image, was a measured fixed cost)
             if ah == 0:
 
                 def dc_block(cid: int, td: int, cz: list) -> None:
@@ -2033,8 +1834,7 @@ def _jpeg_decode_progressive(data: bytes) -> np.ndarray:
             # band's coefficients plus a correction bit per nonzero
             # history position — the decode hot path. Bit machinery
             # INLINED as loop locals exactly as in the baseline MCU
-            # loop (r15 optimization round, guide §1.2 step 2:
-            # removes two Python closure calls per coefficient;
+            # loop (removes two Python closure calls per coefficient;
             # consumed == bp * 8 - nav is _bit_reader's invariant, so
             # the restart/under-consumption checks read it directly).
             # DC scans above keep the shared _bit_reader — they
@@ -2396,6 +2196,43 @@ def _fake_decode(payload: bytes) -> dict:
     }
 
 
+_MEDIA_META_FIELDS = ("kind", "format", "width", "height", "sample_rate", "duration_ms")
+
+
+def _media_table(
+    df: DataFrame, id_col: str, encode: Callable[[int], tuple[bytes, dict]]
+) -> DataFrame:
+    """Shared body of the synthesize_*_media fixtures: one
+    (media_id, payload, meta) row per id, where ``encode(mid)``
+    returns the payload bytes and the meta fields it sets (the rest
+    stay NULL).
+
+    The id scan is spread to the cluster's parallelism before the
+    per-row Python encoder: the local documents fixture arrives as
+    ONE parquet split, so the whole synth+decode chain otherwise runs
+    single-task; at warehouse scale maxPartitionBytes splits the scan
+    naturally and the spread is a no-op. The round-robin exchange of
+    bare ids — a few KB — buys full-width Python stages."""
+    from pyspark.sql.types import StructType
+
+    out_ddl = f"media_id BIGINT, payload BINARY, meta STRUCT<{MEDIA_META_DDL}>"
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid in pdf[id_col].astype("int64"):
+                mid = int(mid)
+                payload, fields = encode(mid)
+                meta = dict.fromkeys(_MEDIA_META_FIELDS)
+                meta.update(fields)
+                rows.append((mid, payload, meta))
+            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
+
+    return spread_small_input(df.select(id_col)).mapInPandas(
+        synth, StructType.fromDDL(out_ddl)
+    )
+
+
 def synthesize_real_media(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -2406,51 +2243,28 @@ def synthesize_real_media(
     decoded values). mapInPandas because container encoding is
     per-row Python — this is fixture/ingest-side work, not a hot
     query path."""
-    from pyspark.sql.types import StructType
 
-    out_ddl = f"media_id BIGINT, payload BINARY, meta STRUCT<{MEDIA_META_DDL}>"
+    def encode(mid: int) -> tuple[bytes, dict]:
+        kind = ("image", "audio", "video")[mid % 3]
+        if kind == "image":
+            w, h = mid % 48 + 16, mid % 32 + 16
+            return _png_bytes(w, h, mid % 256), dict(
+                kind=kind, format="png", width=w, height=h
+            )
+        if kind == "audio":
+            rate, nf = 8000 + (mid % 8) * 1000, mid % 500 + 100
+            return _wav_bytes(rate, nf, mid % 256), dict(
+                kind=kind, format="wav", sample_rate=rate, duration_ms=nf * 1000 // rate
+            )
+        # alternate codecs across video rows: odd ids get Motion-JPEG
+        # (compressed), even ids raw DIB — both decode for real downstream
+        w, h, nframes = mid % 16 + 16, mid % 12 + 12, mid % 4 + 2
+        codec = "mjpg" if mid % 2 else "dib"
+        return _avi_bytes(w, h, nframes, mid % 256, codec=codec), dict(
+            kind=kind, format=codec, width=w, height=h, duration_ms=nframes * 100
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                kind = ("image", "audio", "video")[mid % 3]
-                meta = dict.fromkeys(
-                    ("kind", "format", "width", "height", "sample_rate", "duration_ms")
-                )
-                meta["kind"] = kind
-                if kind == "image":
-                    w, h = mid % 48 + 16, mid % 32 + 16
-                    payload = _png_bytes(w, h, mid % 256)
-                    meta.update(format="png", width=w, height=h)
-                elif kind == "audio":
-                    rate, nf = 8000 + (mid % 8) * 1000, mid % 500 + 100
-                    payload = _wav_bytes(rate, nf, mid % 256)
-                    meta.update(format="wav", sample_rate=rate, duration_ms=nf * 1000 // rate)
-                else:
-                    # alternate codecs across video rows: odd ids get
-                    # Motion-JPEG (compressed), even ids raw DIB —
-                    # both decode for real downstream
-                    w, h, nframes = mid % 16 + 16, mid % 12 + 12, mid % 4 + 2
-                    codec = "mjpg" if mid % 2 else "dib"
-                    payload = _avi_bytes(w, h, nframes, mid % 256, codec=codec)
-                    meta.update(
-                        format=codec, width=w, height=h, duration_ms=nframes * 100
-                    )
-                rows.append((mid, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    # spread the id scan to the cluster's parallelism before the
-    # per-row Python encoder (r14 optimization round, guide §2.5
-    # "input skew"): the local documents fixture arrives as ONE
-    # parquet split, so the whole synth+decode chain otherwise runs
-    # single-task; at warehouse scale maxPartitionBytes splits the
-    # scan naturally and the spread is a no-op. Round-robin exchange
-    # of bare ids — a few KB — buys full-width Python stages.
-    return spread_small_input(df.select(id_col)).mapInPandas(
-        synth, StructType.fromDDL(out_ddl)
-    )
+    return _media_table(df, id_col, encode)
 
 
 def synthesize_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2461,98 +2275,69 @@ def synthesize_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     - cls 0: REAL baseline grayscale JPEG (fully entropy-decodable:
       _jpeg_bytes), alternating SOF0 and SOF1 (extended sequential)
       frame markers by (id // 9) % 2 — identical 8-bit scan path,
-      identical pixels (r14).
-    - cls 1: REAL PROGRESSIVE SOF2 JPEG (_progressive_jpeg_bytes —
-      since r14 a fully decodable multi-scan successive-approximation
-      stream, alternating GRAYSCALE and 4:4:4 COLOR by (id // 9) % 2;
-      the 4:4:4-layout rows additionally carry RESTART MARKERS every
-      2 restart units — decoded for real since late r14; pixel
-      content matches the baseline twins, so the same closed-form
-      oracles pin the progressive path).
+      identical pixels.
+    - cls 1: REAL PROGRESSIVE SOF2 JPEG (_progressive_jpeg_bytes — a
+      fully decodable multi-scan successive-approximation stream),
+      alternating GRAYSCALE and COLOR by (id // 9) % 2; the 4:4:4
+      rows additionally carry RESTART MARKERS every 2 restart units.
+      Pixel content matches the baseline classes, so the same
+      closed-form oracles pin the progressive path.
     - cls 2: REAL interleaved COLOR (YCbCr) baseline JPEG
-      (_jpeg_color_bytes), alternating 4:2:0 and 4:4:4 sampling by
-      (id // 9) % 2 — both decode to identical pixels (flat chroma),
-      so one oracle pins both decoder paths.
+      (3-component _jpeg_bytes), alternating 4:2:0 and 4:4:4
+      sampling by (id // 9) % 2 — both decode to identical pixels
+      (flat chroma), so one oracle pins both decoder paths.
 
     Dims/levels/AC are deterministic functions of the id so the
     oracle recomputes every decoded value closed-form."""
-    from pyspark.sql.types import StructType
 
-    out_ddl = f"media_id BIGINT, payload BINARY, meta STRUCT<{MEDIA_META_DDL}>"
+    def encode(mid: int) -> tuple[bytes, dict]:
+        w, h = mid % 48 + 16, mid % 32 + 16
+        level, ac = mid % 128 + 64, mid % 10
+        chroma = ((mid * 7) % 256, (mid * 13) % 256)
+        cls = (mid // 3) % 3
+        if cls == 0:
+            # alternate SOF0 baseline / SOF1 extended sequential
+            # (identical 8-bit scan path, pixels unchanged — one
+            # oracle pins both markers)
+            payload = _jpeg_bytes(w, h, (level,), ac, extended=(mid // 9) % 2 == 1)
+            fmt = "jpeg"
+        elif cls == 1:
+            # alternate grayscale / color progressive (color rows
+            # further alternate 4:2:0 and 4:4:4 — flat chroma makes
+            # subsampling value-invariant); same content parameters as
+            # the baseline classes so one closed-form oracle pins both
+            # codecs. The 4:4:4 rows carry restart markers every 2
+            # restart units (restarts never change pixels, mirroring
+            # the baseline color class's layout alternation)
+            sub = "4:2:0" if (mid // 18) % 2 == 0 else "4:4:4"
+            payload = _progressive_jpeg_bytes(
+                w,
+                h,
+                level,
+                ac,
+                color=None if (mid // 9) % 2 == 0 else chroma,
+                subsample=sub,
+                restart_interval=0 if sub == "4:2:0" else 2,
+            )
+            fmt = "jpeg-progressive"
+        else:
+            # alternate the two real decode-path variants: plain 4:2:0
+            # vs 4:4:4 WITH restart markers every 2 MCUs (restarts
+            # never change pixels, so the same closed-form oracle pins
+            # both)
+            sub = "4:2:0" if (mid // 9) % 2 == 0 else "4:4:4"
+            payload = _jpeg_bytes(
+                w,
+                h,
+                (level, *chroma),
+                ac,
+                sub,
+                restart_interval=0 if sub == "4:2:0" else 2,
+            )
+            fmt = "jpeg-color"
+        return payload, dict(kind="image", format=fmt, width=w, height=h)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                w, h = mid % 48 + 16, mid % 32 + 16
-                cls = (mid // 3) % 3
-                if cls == 0:
-                    # alternate SOF0 baseline / SOF1 extended
-                    # sequential (r14: identical 8-bit scan path,
-                    # pixels unchanged — one oracle pins both markers)
-                    payload = _jpeg_bytes(
-                        w, h, mid % 128 + 64, mid % 10,
-                        extended=(mid // 9) % 2 == 1,
-                    )
-                    fmt = "jpeg"
-                elif cls == 1:
-                    # alternate grayscale / color progressive (color
-                    # rows further alternate 4:2:0 and 4:4:4 — flat
-                    # chroma makes subsampling value-invariant); same
-                    # content parameters as the baseline classes so
-                    # one closed-form oracle pins both codecs. The
-                    # 4:4:4 rows carry restart markers every 2 restart
-                    # units (r14: RSTn inside progressive scans now
-                    # decode; restarts never change pixels, mirroring
-                    # the baseline color class's layout alternation)
-                    sub = "4:2:0" if (mid // 18) % 2 == 0 else "4:4:4"
-                    payload = _progressive_jpeg_bytes(
-                        w,
-                        h,
-                        mid % 128 + 64,
-                        mid % 10,
-                        color=None
-                        if (mid // 9) % 2 == 0
-                        else ((mid * 7) % 256, (mid * 13) % 256),
-                        subsample=sub,
-                        restart_interval=0 if sub == "4:2:0" else 2,
-                    )
-                    fmt = "jpeg-progressive"
-                else:
-                    # alternate the two real decode-path variants:
-                    # plain 4:2:0 vs 4:4:4 WITH restart markers every
-                    # 2 MCUs (restarts never change pixels, so the
-                    # same closed-form oracle pins both)
-                    sub = "4:2:0" if (mid // 9) % 2 == 0 else "4:4:4"
-                    payload = _jpeg_color_bytes(
-                        w,
-                        h,
-                        mid % 128 + 64,
-                        (mid * 7) % 256,
-                        (mid * 13) % 256,
-                        mid % 10,
-                        sub,
-                        restart_interval=0 if sub == "4:2:0" else 2,
-                    )
-                    fmt = "jpeg-color"
-                meta = dict.fromkeys(
-                    ("kind", "format", "width", "height", "sample_rate", "duration_ms")
-                )
-                meta.update(kind="image", format=fmt, width=w, height=h)
-                rows.append((mid, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    # spread the id scan to the cluster's parallelism before the
-    # per-row Python encoder (r14 optimization round, guide §2.5
-    # "input skew"): the local documents fixture arrives as ONE
-    # parquet split, so the whole synth+decode chain otherwise runs
-    # single-task; at warehouse scale maxPartitionBytes splits the
-    # scan naturally and the spread is a no-op. Round-robin exchange
-    # of bare ids — a few KB — buys full-width Python stages.
-    return spread_small_input(df.select(id_col)).mapInPandas(
-        synth, StructType.fromDDL(out_ddl)
-    )
+    return _media_table(df, id_col, encode)
 
 
 def synthesize_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2577,82 +2362,52 @@ def synthesize_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     with no codec: gray/R = (7x+13y+s) % 256, G = (11x+5y+3s) % 256,
     B = (3x+17y+5s) % 256, A = (9x+y+s) % 256, palette[i] =
     ((3i+17) % 256, (5i+29) % 256, (7i+43) % 256), s = id % 256."""
-    from pyspark.sql.types import StructType
+    pal = np.stack(
+        [
+            (3 * np.arange(256) + 17) % 256,
+            (5 * np.arange(256) + 29) % 256,
+            (7 * np.arange(256) + 43) % 256,
+        ],
+        axis=1,
+    ).astype(np.uint8)
 
-    out_ddl = f"media_id BIGINT, payload BINARY, meta STRUCT<{MEDIA_META_DDL}>"
+    def encode(mid: int) -> tuple[bytes, dict]:
+        w, h = mid % 40 + 8, mid % 24 + 8
+        s = mid % 256
+        cls = ((mid - 1) // 4) % 7
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        gray = ((7 * x + 13 * y + s) % 256).astype(np.uint8)
+        g = ((11 * x + 5 * y + 3 * s) % 256).astype(np.uint8)
+        b = ((3 * x + 17 * y + 5 * s) % 256).astype(np.uint8)
+        a = ((9 * x + y + s) % 256).astype(np.uint8)
+        rgb = np.dstack([gray, g, b])
+        filt = lambda i: (i + s) % 5  # noqa: E731
+        if cls == 0:
+            payload, fmt = _png_encode(gray, 0, filters=filt), "png-gray"
+        elif cls == 1:
+            payload, fmt = _png_encode(rgb, 2, filters=filt), "png-rgb"
+        elif cls == 2:
+            payload = _png_encode(gray, 3, palette=pal, filters=filt)
+            fmt = "png-palette"
+        elif cls == 3:
+            payload = _png_encode(np.dstack([rgb, a]), 6, filters=filt)
+            fmt = "png-rgba"
+        elif cls == 4:
+            payload = _png_encode(np.dstack([gray, a]), 4, filters=filt)
+            fmt = "png-graya"
+        elif cls == 5:
+            payload = _png_encode(rgb, 2, filters=filt, interlace=True)
+            fmt = "png-adam7"
+        else:
+            # conventional 8->16-bit scaling (v * 257); content
+            # irrelevant to the oracle — the class is pinned as an
+            # accounted refusal, dims from IHDR only
+            payload = _png_encode(rgb.astype(np.uint16) * 257, 2, bitdepth=16)
+            fmt = "png-16bit"
+        return payload, dict(kind="image", format=fmt, width=w, height=h)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal = np.stack(
-            [
-                (3 * np.arange(256) + 17) % 256,
-                (5 * np.arange(256) + 29) % 256,
-                (7 * np.arange(256) + 43) % 256,
-            ],
-            axis=1,
-        ).astype(np.uint8)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                w, h = mid % 40 + 8, mid % 24 + 8
-                s = mid % 256
-                cls = ((mid - 1) // 4) % 7
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                gray = ((7 * x + 13 * y + s) % 256).astype(np.uint8)
-                g = ((11 * x + 5 * y + 3 * s) % 256).astype(np.uint8)
-                b = ((3 * x + 17 * y + 5 * s) % 256).astype(np.uint8)
-                a = ((9 * x + y + s) % 256).astype(np.uint8)
-                filt = lambda i, s=s: (i + s) % 5  # noqa: E731
-                if cls == 0:
-                    payload = _png_encode(gray, 0, filters=filt)
-                    fmt = "png-gray"
-                elif cls == 1:
-                    payload = _png_encode(np.dstack([gray, g, b]), 2, filters=filt)
-                    fmt = "png-rgb"
-                elif cls == 2:
-                    payload = _png_encode(gray, 3, palette=pal, filters=filt)
-                    fmt = "png-palette"
-                elif cls == 3:
-                    payload = _png_encode(
-                        np.dstack([gray, g, b, a]), 6, filters=filt
-                    )
-                    fmt = "png-rgba"
-                elif cls == 4:
-                    payload = _png_encode(np.dstack([gray, a]), 4, filters=filt)
-                    fmt = "png-graya"
-                elif cls == 5:
-                    payload = _png_encode(
-                        np.dstack([gray, g, b]), 2, filters=filt, interlace=True
-                    )
-                    fmt = "png-adam7"
-                else:
-                    # conventional 8->16-bit scaling (v * 257); content
-                    # irrelevant to the oracle — the class is pinned as
-                    # an accounted refusal, dims from IHDR only
-                    payload = _png_encode(
-                        np.dstack([gray, g, b]).astype(np.uint16) * 257,
-                        2,
-                        bitdepth=16,
-                    )
-                    fmt = "png-16bit"
-                meta = dict.fromkeys(
-                    ("kind", "format", "width", "height", "sample_rate", "duration_ms")
-                )
-                meta.update(kind="image", format=fmt, width=w, height=h)
-                rows.append((mid, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    # spread the id scan to the cluster's parallelism before the
-    # per-row Python encoder (r14 optimization round, guide §2.5
-    # "input skew"): the local documents fixture arrives as ONE
-    # parquet split, so the whole synth+decode chain otherwise runs
-    # single-task; at warehouse scale maxPartitionBytes splits the
-    # scan naturally and the spread is a no-op. Round-robin exchange
-    # of bare ids — a few KB — buys full-width Python stages.
-    return spread_small_input(df.select(id_col)).mapInPandas(
-        synth, StructType.fromDDL(out_ddl)
-    )
+    return _media_table(df, id_col, encode)
 
 
 def synthesize_cmyk_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2664,48 +2419,19 @@ def synthesize_cmyk_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ac = id%10 riding the ±1 sign grid; flat c2/c3/K), so the oracle
     recomputes every decoded RGB sum closed-form through the
     documented inverted-ink composite."""
-    from pyspark.sql.types import StructType
 
-    out_ddl = f"media_id BIGINT, payload BINARY, meta STRUCT<{MEDIA_META_DDL}>"
+    def encode(mid: int) -> tuple[bytes, dict]:
+        w, h = mid % 48 + 16, mid % 32 + 16
+        transform = 2 if ((mid - 2) // 5) % 2 == 0 else 0
+        levels = (mid % 128 + 64, (mid * 7) % 256, (mid * 13) % 256, (mid * 11) % 256)
+        return _jpeg_bytes(w, h, levels, mid % 10, transform=transform), dict(
+            kind="image",
+            format="jpeg-ycck" if transform == 2 else "jpeg-cmyk",
+            width=w,
+            height=h,
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                w, h = mid % 48 + 16, mid % 32 + 16
-                transform = 2 if ((mid - 2) // 5) % 2 == 0 else 0
-                payload = _jpeg_cmyk_bytes(
-                    w, h,
-                    mid % 128 + 64,
-                    (mid * 7) % 256,
-                    (mid * 13) % 256,
-                    (mid * 11) % 256,
-                    mid % 10,
-                    transform=transform,
-                )
-                meta = dict.fromkeys(
-                    ("kind", "format", "width", "height", "sample_rate", "duration_ms")
-                )
-                meta.update(
-                    kind="image",
-                    format="jpeg-ycck" if transform == 2 else "jpeg-cmyk",
-                    width=w,
-                    height=h,
-                )
-                rows.append((mid, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    # spread the id scan to the cluster's parallelism before the
-    # per-row Python encoder (r14 optimization round, guide §2.5
-    # "input skew"): the local documents fixture arrives as ONE
-    # parquet split, so the whole synth+decode chain otherwise runs
-    # single-task; at warehouse scale maxPartitionBytes splits the
-    # scan naturally and the spread is a no-op. Round-robin exchange
-    # of bare ids — a few KB — buys full-width Python stages.
-    return spread_small_input(df.select(id_col)).mapInPandas(
-        synth, StructType.fromDDL(out_ddl)
-    )
+    return _media_table(df, id_col, encode)
 
 
 def png_rgb_sums(media: DataFrame) -> DataFrame:
@@ -2823,14 +2549,13 @@ def jpeg_rgb_sums(media: DataFrame) -> DataFrame:
 def decode_media(media: DataFrame) -> DataFrame:
     """Decode step over (media_id, payload, meta) -> decoded metadata
     rows. Dispatches on the payload's MAGIC BYTES, as a real decoder
-    does: PNG (full codec surface since r14: filters, five color
-    types, Adam7), WAV, AVI (DIB + MJPEG), bare baseline JPEG
-    (grayscale + interleaved color + SOF1 + Adobe CMYK/YCCK) and —
-    since r14 — bare PROGRESSIVE JPEG (SOF2), fully entropy-decoded
-    through the multi-scan spectral-selection +
-    successive-approximation path (ok=true /
-    decoder='jpeg-progressive' / n_bytes = reconstructed
-    sample count, restart-marker streams included since r14).
+    does: PNG (full codec surface: filters, five color types,
+    Adam7), WAV, AVI (DIB + MJPEG), bare baseline JPEG (grayscale +
+    interleaved color + SOF1 + Adobe CMYK/YCCK) and bare PROGRESSIVE
+    JPEG (SOF2), fully entropy-decoded through the multi-scan
+    spectral-selection + successive-approximation path (ok=true /
+    decoder='jpeg-progressive' / n_bytes = reconstructed sample
+    count, restart-marker streams included).
     Decoder refusals (RST/DRI layout desync inside
     progressive scans, 16-bit DQT, truncated entropy, APP14-less
     4-component layouts, ...) are ACCOUNTED ok=false row classes with
@@ -2905,13 +2630,12 @@ def decode_media(media: DataFrame) -> DataFrame:
                 elif p[:2] == b"\xff\xd8":
                     info = _parse_jpeg(p)
                     if info.get("progressive"):
-                        # REAL multi-scan reconstruction (r14: the
-                        # r13 verdict's largest honest boundary
-                        # closed) — spectral selection + successive
-                        # approximation scan accumulation, restart
-                        # markers included; refusals (RST/DRI layout
-                        # desync, exotic layouts) fall to the
-                        # accounted undecodable class
+                        # REAL multi-scan reconstruction — spectral
+                        # selection + successive approximation scan
+                        # accumulation, restart markers included;
+                        # refusals (RST/DRI layout desync, exotic
+                        # layouts) fall to the accounted undecodable
+                        # class
                         try:
                             px = _jpeg_decode_progressive(p)
                         except ValueError:
@@ -3122,9 +2846,10 @@ def resize_images(
     media: DataFrame, out_w: int = 8, out_h: int = 8
 ) -> DataFrame:
     """Nearest-neighbor thumbnail resize over REAL decoded pixels:
-    PNG payloads are decoded (actual IDAT decompression via
-    _decode_png's chunk walk), the grayscale pixel grid is
-    subsampled at src = floor(dst * src_dim / out_dim), and each
+    PNG payloads are decoded through the shared PNG decoder
+    (_png_pixels: filters inverted, palette expanded, interlace
+    reassembled, color reduced to integer luma), the brightness grid
+    is subsampled at src = floor(dst * src_dim / out_dim), and each
     thumbnail is emitted as summary scalars — mean pixel value plus
     an md5 signature of the row-major pixel list (driver-side
     canonicalization cannot hash array cells, and the signature
@@ -3135,8 +2860,6 @@ def resize_images(
     with numpy fancy-indexing per batch — the standard Arrow-batched
     shape for per-row binary work; maxRecordsPerBatch bounds memory.
     """
-    import struct
-    import zlib
 
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ys = np.arange(out_h)
@@ -3145,20 +2868,10 @@ def resize_images(
             out = []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):
                 p = bytes(p or b"")
-                if p[:8] != b"\x89PNG\r\n\x1a\n":
+                if p[:8] != _PNG_SIG:
                     continue
-                d = _decode_png(p)
-                w, h = d["width"], d["height"]
-                # re-walk IDAT for the pixel rows (filter byte stripped)
-                pos, idat = 8, b""
-                while pos + 8 <= len(p):
-                    (length,) = struct.unpack(">I", p[pos : pos + 4])
-                    ctype = p[pos + 4 : pos + 8]
-                    if ctype == b"IDAT":
-                        idat += p[pos + 8 : pos + 8 + length]
-                    pos += 12 + length
-                raw = zlib.decompress(idat)
-                grid = np.frombuffer(raw, dtype=np.uint8).reshape(h, w + 1)[:, 1:]
+                grid = _png_pixels(p)
+                h, w = grid.shape
                 thumb = grid[(ys * h) // out_h][:, (xs * w) // out_w]
                 flat = thumb.reshape(-1)
                 sig = hashlib.md5(
@@ -3249,8 +2962,8 @@ PHASH_DDL = "media_id BIGINT, phash STRING, b0 INT, b1 INT, b2 INT, b3 INT"
 
 def _png_pixels(data: bytes) -> np.ndarray:
     """Decode a PNG into its (h, w) brightness matrix via the full
-    decoder (r14: filters/color types/interlace all reconstruct for
-    real; corrupt payloads still FAIL, never guess). Gray planes pass
+    decoder (filters/color types/interlace all reconstruct for real;
+    corrupt payloads FAIL, never guess). Gray planes pass
     through; gray+alpha drops alpha; RGB(A) reduces to integer luma
     (299*R + 587*G + 114*B) // 1000 — fixed-point Rec.601, no float
     rounding ambiguity for the oracle to chase."""

@@ -51,13 +51,13 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         # inputFiles() keeps its existing partitioning — the old
         # unconditional fallback could COALESCE an already-wide
         # input to defaultParallelism and shuffle full rows for
-        # nothing (r15, from the r14 ADVICE). Still metadata-only:
-        # collectLeaves walks the analyzed plan, no execution.
+        # nothing. Still metadata-only: collectLeaves walks the
+        # analyzed plan, no execution. Leaf classes match by exact
+        # name (pinned in tests/test_dedup.py).
         try:
             leaves = df._jdf.queryExecution().analyzed().collectLeaves()
             few_splits = all(
-                "LocalRelation" in leaves.apply(i).nodeName()
-                or "OneRowRelation" in leaves.apply(i).nodeName()
+                leaves.apply(i).nodeName() in {"LocalRelation", "OneRowRelation"}
                 for i in range(leaves.size())
             )
         except Exception:

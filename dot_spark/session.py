@@ -17,13 +17,15 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "dot_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
-    shuffle_partitions defaults to 32 locally; on a real cluster this
-    should be ~2-3x total cores (or left to AQE's coalescing with a
-    high initial value). AQE is on everywhere: it re-plans skewed
-    joins and coalesces tiny post-shuffle partitions at runtime,
-    which is exactly what a 100 TB run needs when key skew shows up.
+    Local mode runs one task slot per CPU this process may use
+    (SPARK_GRAFT_CPUS overrides), and shuffle_partitions defaults to
+    the same count; on a real cluster it should be ~2-3x total cores
+    (or left to AQE's coalescing with a high initial value). AQE is
+    on everywhere: it re-plans skewed joins and coalesces tiny
+    post-shuffle partitions at runtime, which is exactly what a
+    100 TB run needs when key skew shows up.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("DOT_SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = SparkSession.builder.appName(app_name)

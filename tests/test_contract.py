@@ -132,6 +132,32 @@ def test_queries_survive_bare_driver_session(tmp_path):
     assert "BARE_SESSION_OK" in out.stdout, out.stderr[-2000:]
 
 
+def test_session_master_defaults_to_cpu_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, a bare process runs local[N] with
+    N = the CPUs it may run on, never a constant sized for another
+    box; shuffle partitions follow. getOrCreate is patched to hand
+    back the builder's options, so no second JVM starts."""
+    from pyspark.sql import SparkSession
+
+    from dot_spark import get_spark
+
+    for var in (
+        "SPARK_GRAFT_CPUS",
+        "DOT_SPARK_MASTER",
+        "DOT_SPARK_SHUFFLE_PARTITIONS",
+        "PYSPARK_GATEWAY_PORT",
+        "PYSPARK_SUBMIT_ARGS",
+    ):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    opts = get_spark("session_default_probe")
+    n = len(os.sched_getaffinity(0))
+    assert opts["spark.master"] == f"local[{n}]"
+    assert opts["spark.sql.shuffle.partitions"] == str(n)
+
+
 def test_bench_isolates_per_query_failures(spark, sf_dir, monkeypatch, capsys):
     """One broken query must cost its own {"err": ...} row, never the
     whole bench artifact (round 4 lost its entire perf record to a

@@ -343,3 +343,41 @@ def test_cc_star_round_count_logarithmic(spark):
         rounds_at[n] = st["rounds"]
     assert rounds_at[300] <= rounds_at[30] + 4, rounds_at
     assert rounds_at[300] <= 12, rounds_at
+
+
+def test_spread_small_input_leaf_allowlist(spark, sf_dir, monkeypatch):
+    """spread_small_input classifies plans that report no input files
+    by their analyzed-plan leaves, matched by EXACT class name:
+    LocalRelation (pandas createDataFrame) and OneRowRelation
+    (`select 1`) spread; LogicalRDD (list createDataFrame) keeps its
+    partitioning. A parquet scan (LogicalRelation) is classified by
+    its inputFiles() count instead. The leaf branch runs only when
+    inputFiles() raises, so it is forced here."""
+    import pandas as pd
+
+    from dot_spark.operators.textdedup import spread_small_input
+
+    def leaf_names(df):
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+    scan = spark.read.parquet(f"{sf_dir}/region.parquet")
+    assert leaf_names(scan) == ["LogicalRelation"]
+    n_files = len(scan.inputFiles())
+    assert n_files >= 1
+    target = spark.sparkContext.defaultParallelism
+    assert (spread_small_input(scan) is not scan) == (n_files < target)
+
+    cases = [
+        (spark.createDataFrame(pd.DataFrame({"a": [1, 2]})), "LocalRelation", True),
+        (spark.sql("select 1 as a"), "OneRowRelation", True),
+        (spark.createDataFrame([(1,), (2,)], "a int"), "LogicalRDD", False),
+    ]
+
+    def no_files(self):
+        raise RuntimeError("not file-backed")
+
+    monkeypatch.setattr(type(scan), "inputFiles", no_files)
+    for df, leaf, spread in cases:
+        assert leaf_names(df) == [leaf]
+        assert (spread_small_input(df) is not df) == spread, leaf

@@ -215,7 +215,7 @@ def test_jpeg_parser_rejects_cut_before_scan():
     landing mid-segment must raise ValueError too (not struct.error)."""
     from dot_spark.operators.multimodal import _jpeg_bytes, _parse_jpeg
 
-    j = _jpeg_bytes(20, 14, 7)
+    j = _jpeg_bytes(20, 14, (7,))
     sos = j.index(b"\xff\xda")
     with pytest.raises(ValueError):
         _parse_jpeg(j[:sos])  # headers only, no scan
@@ -230,7 +230,7 @@ def test_jpeg_encoder_emits_valid_codestream():
     from dot_spark.operators.multimodal import _jpeg_bytes, _parse_jpeg
 
     for w, h, v in [(16, 16, 0), (17, 9, 255), (31, 23, 128), (8, 8, 77)]:
-        j = _jpeg_bytes(w, h, v)
+        j = _jpeg_bytes(w, h, (v,))
         assert j[:2] == b"\xff\xd8" and j[-2:] == b"\xff\xd9"
         dims = _parse_jpeg(j)
         assert (dims["width"], dims["height"], dims["n_components"]) == (w, h, 1)
@@ -313,12 +313,12 @@ def test_jpeg_full_decoder_roundtrip_and_failure_modes():
         (8, 8, 64, 0), (16, 12, 191, 0), (17, 13, 77, 9),
         (9, 1, 128, 3), (24, 20, 100, 5), (31, 23, 150, 1),
     ]:
-        px = _jpeg_decode_gray(_jpeg_bytes(w, h, g, ac44=c))
+        px = _jpeg_decode_gray(_jpeg_bytes(w, h, (g,), ac44=c))
         assert px.shape == (h, w)
         want = g + 2 * c * np.outer(s[np.arange(h) % 8], s[np.arange(w) % 8])
         assert (px == want).all()
     # truncated entropy stream must fail, not emit partial frames
-    b = _jpeg_bytes(32, 32, 200, ac44=4)
+    b = _jpeg_bytes(32, 32, (200,), ac44=4)
     with pytest.raises(ValueError):
         _jpeg_decode_gray(b[:-10] + b"\xff\xd9")
     # progressive (SOF2) must be refused, not mis-decoded
@@ -343,12 +343,20 @@ def test_resize_thumbnail_pixels_match_formula(spark):
     """The 8x8 nearest-neighbor thumbnail of a synthesized PNG must
     equal the synthesis formula sampled at floor-scaled indices —
     verified pixel-exactly via the md5 signature, plus the exact mean
-    (/64 is a power-of-two division)."""
+    (/64 is a power-of-two division). Direct payloads with non-zero
+    scanline filters and an RGB color type must thumbnail the
+    decoded brightness grid (_png_pixels) the same way."""
     import hashlib
 
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from dot_spark.operators.multimodal import resize_images, synthesize_real_media
+    from dot_spark.operators.multimodal import (
+        _png_encode,
+        _png_pixels,
+        resize_images,
+        synthesize_real_media,
+    )
 
     # doc_id 6 -> image row: w=6%48+16=22, h=6%32+16=22, seed=6
     docs = spark.createDataFrame([(6, "x")], "doc_id bigint, text string")
@@ -366,6 +374,29 @@ def test_resize_thumbnail_pixels_match_formula(spark):
     ).hexdigest()
     assert r["mean_px"] == round(sum(pix) / 64.0, 4)
     assert (r["out_w"], r["out_h"]) == (8, 8)
+
+    x = np.arange(19)[None, :]
+    y = np.arange(13)[:, None]
+    gray = ((7 * x + 13 * y + 5) % 256).astype(np.uint8)
+    rgb = np.dstack([gray, (11 * x + 5 * y) % 256, (3 * x + 17 * y) % 256])
+    payloads = {
+        1: _png_encode(gray, 0, filters=lambda i: (i + 1) % 5),
+        2: _png_encode(rgb.astype(np.uint8), 2),
+    }
+    direct = spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in payloads.items()],
+        "media_id bigint, payload binary",
+    )
+    got = {r["media_id"]: r for r in resize_images(direct).collect()}
+    assert set(got) == set(payloads)
+    for mid, payload in payloads.items():
+        px = _png_pixels(payload)
+        h, w = px.shape
+        thumb = px[(np.arange(8) * h) // 8][:, (np.arange(8) * w) // 8].ravel()
+        assert got[mid]["thumb_sig"] == hashlib.md5(
+            ",".join(str(int(v)) for v in thumb).encode()
+        ).hexdigest(), mid
+        assert got[mid]["mean_px"] == round(float(thumb.mean()), 4), mid
 
 
 def test_resize_drops_non_image_rows(spark):
@@ -630,7 +661,6 @@ def test_progressive_equals_baseline_pixels_law():
 
     from dot_spark.operators.multimodal import (
         _jpeg_bytes,
-        _jpeg_color_bytes,
         _jpeg_decode_baseline,
         _jpeg_decode_progressive,
         _progressive_jpeg_bytes,
@@ -639,7 +669,7 @@ def test_progressive_equals_baseline_pixels_law():
     for w, h in ((16, 16), (33, 21), (17, 40)):
         for gray in (64, 65, 127, 128, 191):
             for ac in (0, 1, 2, 9):
-                b = _jpeg_decode_baseline(_jpeg_bytes(w, h, gray, ac))
+                b = _jpeg_decode_baseline(_jpeg_bytes(w, h, (gray,), ac))
                 p = _jpeg_decode_progressive(
                     _progressive_jpeg_bytes(w, h, gray, ac)
                 )
@@ -650,7 +680,7 @@ def test_progressive_equals_baseline_pixels_law():
     ):
         for sub in ("4:4:4", "4:2:0"):
             b = _jpeg_decode_baseline(
-                _jpeg_color_bytes(33, 21, y0, cb0, cr0, ac, sub)
+                _jpeg_bytes(33, 21, (y0, cb0, cr0), ac, sub)
             )
             p = _jpeg_decode_progressive(
                 _progressive_jpeg_bytes(
@@ -698,17 +728,17 @@ def test_progressive_refusals_are_accounted(spark):
 
 
 def test_color_jpeg_roundtrip_both_subsamplings():
-    """_jpeg_decode_baseline reconstructs the exact RGB field
-    _jpeg_color_bytes encoded — interleaved YCbCr MCUs, per-component
-    DC predictors, SOS-mapped chroma table ids, chroma upsampling,
-    and the 10^-6 fixed-point JFIF transform — and 4:2:0 / 4:4:4
-    payloads of the same content decode to IDENTICAL pixels (flat
-    chroma makes subsampling value-invariant, which is what lets one
-    oracle pin both paths)."""
+    """_jpeg_decode_baseline reconstructs the exact RGB field the
+    3-component _jpeg_bytes encoded — interleaved YCbCr MCUs,
+    per-component DC predictors, SOS-mapped chroma table ids, chroma
+    upsampling, and the 10^-6 fixed-point JFIF transform — and
+    4:2:0 / 4:4:4 payloads of the same content decode to IDENTICAL
+    pixels (flat chroma makes subsampling value-invariant, which is
+    what lets one oracle pin both paths)."""
     import numpy as np
 
     from dot_spark.operators.multimodal import (
-        _jpeg_color_bytes,
+        _jpeg_bytes,
         _jpeg_decode_baseline,
     )
 
@@ -738,10 +768,10 @@ def test_color_jpeg_roundtrip_both_subsamplings():
             axis=-1,
         ).astype(np.uint8)
         px420 = _jpeg_decode_baseline(
-            _jpeg_color_bytes(w, h, y0, cb0, cr0, ac, "4:2:0")
+            _jpeg_bytes(w, h, (y0, cb0, cr0), ac, "4:2:0")
         )
         px444 = _jpeg_decode_baseline(
-            _jpeg_color_bytes(w, h, y0, cb0, cr0, ac, "4:4:4")
+            _jpeg_bytes(w, h, (y0, cb0, cr0), ac, "4:4:4")
         )
         assert px420.shape == (h, w, 3)
         assert np.array_equal(px420, want)
@@ -754,12 +784,12 @@ def test_gray_wrapper_refuses_color():
     import pytest
 
     from dot_spark.operators.multimodal import (
-        _jpeg_color_bytes,
+        _jpeg_bytes,
         _jpeg_decode_gray,
     )
 
     with pytest.raises(ValueError, match="multi-component"):
-        _jpeg_decode_gray(_jpeg_color_bytes(16, 16, 100, 90, 160))
+        _jpeg_decode_gray(_jpeg_bytes(16, 16, (100, 90, 160), subsample="4:2:0"))
 
 
 def test_decode_media_color_and_multicomponent_classes(spark):
@@ -854,20 +884,20 @@ def test_jpeg_restart_markers_roundtrip_and_reject():
     import pytest
 
     from dot_spark.operators.multimodal import (
-        _jpeg_color_bytes,
+        _jpeg_bytes,
         _jpeg_decode_baseline,
     )
 
     for w, h, sub in [(17, 23, "4:2:0"), (33, 18, "4:4:4")]:
         plain = _jpeg_decode_baseline(
-            _jpeg_color_bytes(w, h, 70, 200, 30, 5, sub)
+            _jpeg_bytes(w, h, (70, 200, 30), 5, sub)
         )
         for dri in (1, 2, 5):
             rst = _jpeg_decode_baseline(
-                _jpeg_color_bytes(w, h, 70, 200, 30, 5, sub, restart_interval=dri)
+                _jpeg_bytes(w, h, (70, 200, 30), 5, sub, restart_interval=dri)
             )
             assert np.array_equal(plain, rst), (w, h, sub, dri)
-    with_dri = _jpeg_color_bytes(16, 16, 100, 90, 160, 3, "4:4:4", restart_interval=2)
+    with_dri = _jpeg_bytes(16, 16, (100, 90, 160), 3, "4:4:4", restart_interval=2)
     import struct
 
     dri_seg = struct.pack(">HH", 0xFFDD, 4) + struct.pack(">H", 2)
@@ -1117,12 +1147,12 @@ def test_sof1_extended_sequential_decodes_and_12bit_refused(spark):
 
     for w, h in [(16, 16), (21, 13)]:
         for ac in (0, 3, 9):
-            base = _jpeg_decode_baseline(_jpeg_bytes(w, h, 130, ac))
-            ext = _jpeg_decode_baseline(_jpeg_bytes(w, h, 130, ac, extended=True))
+            base = _jpeg_decode_baseline(_jpeg_bytes(w, h, (130,), ac))
+            ext = _jpeg_decode_baseline(_jpeg_bytes(w, h, (130,), ac, extended=True))
             assert ext.shape == base.shape and (ext == base).all()
 
     # rewrite the SOF1 precision byte to 12: refusal, accounted
-    good = _jpeg_bytes(24, 18, 100, 2, extended=True)
+    good = _jpeg_bytes(24, 18, (100,), 2, extended=True)
     sof1 = struct.pack(">HH", 0xFFC1, 11) + struct.pack(">BHHB", 8, 18, 24, 1)
     assert sof1 in good
     deep = good.replace(
@@ -1155,7 +1185,7 @@ def test_cmyk_ycck_decode_matches_composite_and_accounting(spark):
     import numpy as np
 
     from dot_spark.operators.multimodal import (
-        _jpeg_cmyk_bytes,
+        _jpeg_bytes,
         _jpeg_decode_baseline,
         decode_media,
         synthesize_cmyk_media,
@@ -1171,7 +1201,7 @@ def test_cmyk_ycck_decode_matches_composite_and_accounting(spark):
                 yy = (c1 + 2 * ac * (s[x % 8] * s[y % 8])).astype(np.int64)
                 # YCCK
                 px = _jpeg_decode_baseline(
-                    _jpeg_cmyk_bytes(w, h, c1, c2, c3, k0, ac, transform=2)
+                    _jpeg_bytes(w, h, (c1, c2, c3, k0), ac, transform=2)
                 )
                 r = np.clip((m * yy + 1_402_000 * (c3 - 128) + m // 2) // m, 0, 255)
                 g = np.clip(
@@ -1186,7 +1216,7 @@ def test_cmyk_ycck_decode_matches_composite_and_accounting(spark):
                 assert (px == want).all()
                 # direct CMYK
                 px = _jpeg_decode_baseline(
-                    _jpeg_cmyk_bytes(w, h, c1, c2, c3, k0, ac, transform=0)
+                    _jpeg_bytes(w, h, (c1, c2, c3, k0), ac, transform=0)
                 )
                 cp = np.clip(yy, 0, 255)
                 want = np.stack(
@@ -1206,7 +1236,7 @@ def test_cmyk_ycck_decode_matches_composite_and_accounting(spark):
         assert r["n_bytes"] == r["width"] * r["height"] * 3
 
     # stripping the APP14 flips a valid stream to the accounted class
-    raw = _jpeg_cmyk_bytes(16, 16, 130, 40, 200, 255, 2, transform=2)
+    raw = _jpeg_bytes(16, 16, (130, 40, 200, 255), 2, transform=2)
     app14 = struct.pack(">HH", 0xFFEE, 14) + b"Adobe" + struct.pack(
         ">HHHB", 100, 0, 0, 2
     )

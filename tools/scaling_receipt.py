@@ -16,9 +16,10 @@ larger input:
    this tool only — nothing under /root/testdata is touched, nothing
    is read back by bench.py or the queries outside this receipt, and
    the dir is deleted afterwards unless --keep.
-2. For each core count (32, 8), run the named queries in a FRESH
-   subprocess (cold JVM, exactly the bench contract's
-   local[$SPARK_GRAFT_CPUS]) via tools/solo_time.py, min-of-N.
+2. For each core count (N, max(1, N // 4)), N = the CPUs this
+   process may run on, run the named queries in a FRESH subprocess
+   (cold JVM, exactly the bench contract's local[$SPARK_GRAFT_CPUS])
+   via tools/solo_time.py, min-of-N.
 3. Emit tools/ab_receipts/r15_scaling.json with per-query seconds
    and the low/high-core ratio (ratio >> 1 = the query actually
    parallelizes at this scale).
@@ -129,8 +130,10 @@ def main() -> None:
         "queries": names,
         "per_cpus": {},
     }
+    cores = len(os.sched_getaffinity(0))
+    hi, lo = cores, max(1, cores // 4)
     try:
-        for cpus in (32, 8):
+        for cpus in (hi, lo):
             env = dict(
                 os.environ,
                 SPARK_GRAFT_CPUS=str(cpus),
@@ -151,10 +154,10 @@ def main() -> None:
             print(f"cpus={cpus}: {line}")
         ratios = {}
         for q in names:
-            t32 = result["per_cpus"]["32"][q]["min"]
-            t8 = result["per_cpus"]["8"][q]["min"]
-            ratios[q] = round(t8 / t32, 3) if t32 else None
-        result["ratio_8_over_32"] = ratios
+            t_hi = result["per_cpus"][str(hi)][q]["min"]
+            t_lo = result["per_cpus"][str(lo)][q]["min"]
+            ratios[q] = round(t_lo / t_hi, 3) if t_hi else None
+        result["ratio_low_over_high"] = ratios
     finally:
         if not keep:
             shutil.rmtree(up_dir, ignore_errors=True)
@@ -166,7 +169,7 @@ def main() -> None:
     with open(path, "w") as f:
         json.dump(result, f, indent=2)
     print(f"wrote {path}")
-    print(json.dumps(result.get("ratio_8_over_32", {}), indent=2))
+    print(json.dumps(result.get("ratio_low_over_high", {}), indent=2))
 
 
 if __name__ == "__main__":
