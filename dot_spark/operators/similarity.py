@@ -445,7 +445,6 @@ def semdedup(
     vec_col: str = "embedding",
     threshold: float = 0.45,
     max_bucket: int | str | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023, public
     arXiv:2303.09540): within each embedding cell, near-duplicate
@@ -457,8 +456,8 @@ def semdedup(
 
     Composition of three existing scale shapes: dd5b bucket-pruned
     pair mining (broadcast-build equi-join, never n^2), dd8
-    connected components (pointer-jumping label propagation), and the
-    centroid scoring pass (two partial-agg shuffles). Output:
+    connected components (large-star/small-star edge contraction),
+    and the centroid scoring pass (two partial-agg shuffles). Output:
     (id, cell, cluster_id, cos_to_centroid, keep).
 
     ``max_bucket`` passes through to the pair miner (hot-cell cap):
@@ -475,10 +474,6 @@ def semdedup(
     )
 
     scored = cosine_to_cell_centroid(emb, cell_col, id_col, vec_col)
-    # materialize=False threads to the pair miner's hot-list
-    # checkpoint ONLY (the twin plan pin path); the clustering loop
-    # below always checkpoints — its per-round truncation is
-    # load-bearing for constant plan depth
     pairs = bucketed_neardup_pairs(
         emb,
         cell_col,
@@ -486,7 +481,6 @@ def semdedup(
         vec_col=vec_col,
         threshold=threshold,
         max_bucket=max_bucket,
-        materialize=materialize,
     )
     cc = connected_components(pairs.select("id_a", "id_b"))
     labeled = scored.join(

@@ -364,7 +364,6 @@ def pmi_collocations(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_count: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bigram collocations scored by pointwise mutual information
     (Church & Hanks, CL'90): pmi = ln(P(xy) / (P(x)P(y))) over
@@ -392,19 +391,13 @@ def pmi_collocations(
     # (n_bi, the floor-filtered bc) — materialize both vocab-sized
     # tables so neither corpus explode compiles per branch (t15's
     # discipline; measured 1.7x on the unigram family at sf0.1).
-    # The checkpoints truncate the visible plan, so materialize=False
-    # exposes the full tree for the un-truncated pin in
-    # tests/test_plans.py (the t24 pattern).
     uni = terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    if materialize:
-        uni = uni.localCheckpoint(eager=False)
+    uni = uni.localCheckpoint(eager=False)
     n_uni = uni.agg(F.sum("c").alias("n_uni"))
     bg = shingle_rows(df, id_col=id_col, text_col=text_col, n=2)
     bc_all = bg.groupBy(F.col("shingle").alias("bigram")).agg(
         F.count(F.lit(1)).alias("c_xy")
-    )
-    if materialize:
-        bc_all = bc_all.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     n_bi = bc_all.agg(F.sum("c_xy").alias("n_bi"))
     bc = (
         bc_all.filter(F.col("c_xy") >= min_count)
@@ -667,7 +660,6 @@ def perplexity_prune(
     id_col: str = "doc_id",
     q_low: float = 0.33,
     q_high: float = 0.66,
-    materialize: bool = True,
 ) -> DataFrame:
     """CCNet-style perplexity partition: score every doc by its
     average negative log-probability under the corpus's own unigram
@@ -695,12 +687,9 @@ def perplexity_prune(
     toks = F.split(normalize_text(F.col(text_col)), " ")
     terms = df.select(F.col(id_col), F.explode(toks).alias("term"))
     # |vocab|-row table, two consumers (join side + total):
-    # materialize once (t15's discipline). Gated on `materialize`
-    # like the scored table below, so the materialize=False plan pin
-    # sees the WHOLE un-truncated tree, freq branch included.
+    # materialize once (t15's discipline)
     freq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    if materialize:
-        freq = freq.localCheckpoint(eager=False)
+    freq = freq.localCheckpoint(eager=False)
     total = freq.agg(F.sum("cnt").alias("n"))
     scored = (
         terms.join(F.broadcast(freq), "term")
@@ -719,16 +708,8 @@ def perplexity_prune(
     # without materialization Catalyst compiles (and runs) the whole
     # explode+join+agg subtree once per branch — a lazy localCheckpoint
     # of the narrow per-doc table (3 columns, one row per doc) halves
-    # the heavy work (the dd4b shared-shingle-table pattern). NOTE:
-    # the checkpoint truncates the visible executedPlan to a
-    # LogicalRDD stub, so the plan baseline cannot watch the scoring
-    # subtree through it — materialize=False exists ONLY so
-    # tests/test_plans.py can pin the un-truncated shape (14
-    # exchanges / 6 scans with the duplicated branches; a lost
-    # broadcast(freq) or extra scan grows those counts and fails the
-    # pin even though the production form hides them).
-    if materialize:
-        scored = scored.localCheckpoint(eager=False)
+    # the heavy work (the dd4b shared-shingle-table pattern)
+    scored = scored.localCheckpoint(eager=False)
     cuts = scored.agg(
         F.percentile("nll", q_low).alias("__c1"),
         F.percentile("nll", q_high).alias("__c2"),
@@ -756,7 +737,6 @@ def dsir_importance(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 256,
-    materialize: bool = True,
 ) -> DataFrame:
     """DSIR (Xie et al., NeurIPS 2023) data selection via importance
     resampling: estimate target and raw unigram distributions over
@@ -797,12 +777,10 @@ def dsir_importance(
         F.count(F.lit(1)).alias("raw_c"),
         F.count(F.when(F.col("__tgt"), 1)).alias("tgt_c"),
     )
-    if materialize:
-        # n_buckets rows feeding two consumers (join build side +
-        # totals) — materialize so neither branch re-runs the corpus
-        # explode under the aggregation (materialize=False exists
-        # ONLY for the un-truncated twin plan pin, the t24 pattern)
-        counts = counts.localCheckpoint(eager=False)
+    # n_buckets rows feeding two consumers (join build side +
+    # totals) — materialize so neither branch re-runs the corpus
+    # explode under the aggregation
+    counts = counts.localCheckpoint(eager=False)
     totals = counts.agg(
         F.sum("raw_c").alias("raw_n"), F.sum("tgt_c").alias("tgt_n")
     )

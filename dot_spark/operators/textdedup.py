@@ -315,7 +315,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.7,
     shingle_maxdf: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing at least
     one shingle, filtered to jaccard >= threshold.
@@ -356,7 +355,7 @@ def ngram_jaccard_pairs(
     # m^2 expansion evenly over tasks. AQE's skew-split engagement is
     # receipts-backed: tools/scale_sanity.py j6_unsalted_hot_join +
     # the plan-pinned skew=true test in tests/test_scale.py.
-    sh, sizes = _distinct_shingle_hashes(df, id_col, text_col, n, materialize)
+    sh, sizes = _distinct_shingle_hashes(df, id_col, text_col, n)
     freq = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df_sh"))
     keep = F.col("df_sh") >= 2
     if shingle_maxdf is not None:
@@ -377,7 +376,7 @@ def ngram_jaccard_pairs(
 
 
 def _distinct_shingle_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int, materialize: bool = True
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> tuple[DataFrame, DataFrame]:
     """((id, sh_h) rows, (id, n_sh) sizes) — per-doc SET semantics via
     distinct on the 8-byte xxhash64 of the shingle, not the string:
@@ -387,9 +386,7 @@ def _distinct_shingle_hashes(
     candidate verifier (verified_neardup_pairs) so the jaccard both
     compute is the same measure.
 
-    The distinct table is LAZILY localCheckpoint'ed (gated on
-    `materialize` so the plan-pin twin can see the full tree): it
-    feeds four
+    The distinct table is LAZILY localCheckpoint'ed: it feeds four
     consumers in the miner (df-frequency, both self-join sides,
     per-doc sizes) and Catalyst compiles a shared subtree once PER
     CONSUMER — the lazy form recompiled the normalize+explode+
@@ -404,12 +401,8 @@ def _distinct_shingle_hashes(
         shingle_rows(df, id_col, text_col, n)
         .select(F.col(id_col), F.xxhash64("shingle").alias("sh_h"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        # materialize=False exposes the un-truncated tree for the
-        # twin plan pin in tests/test_plans.py (the t24 pattern) —
-        # the checkpoint hides everything below it from executedPlan
-        sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     return sh, sizes
 
@@ -525,9 +518,7 @@ def bucketed_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    broadcast_build: bool = True,
     max_bucket: int | str | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bucket-pruned embedding near-dup: only pairs within the same
     coarse bucket (IVF cell id, LSH hyperplane signature, cluster
@@ -537,18 +528,6 @@ def bucketed_neardup_pairs(
     from O(n^2) to sum over buckets of O(m_b^2). Recall = probability
     both members of a true pair share a bucket; raise it by probing
     multiple buckets (union over probe columns).
-
-    broadcast_build=True joins a BROADCAST build side against the
-    spread probe side, so the probe keeps its scan partitioning and
-    the post-join pair blow-up parallelizes over every core. The
-    shuffle-join alternative caps parallelism at the bucket count —
-    and worse, AQE coalesces the tiny pre-blow-up shuffle to ~1
-    partition (exchange bytes are small; the m_b^2 expansion happens
-    AFTER the exchange, invisible to AQE) — measured 8x slower on a
-    10-cell fixture. Disable it only when the build side itself is
-    too big to broadcast (full-corpus self-join at 100 TB, where the
-    bucket count dwarfs the core count and the shuffle join's
-    per-bucket parallelism is already sufficient).
 
     Norms are precomputed once per vector per side; the per-pair work
     is a single dot-product fold.
@@ -602,15 +581,12 @@ def bucketed_neardup_pairs(
         hot = sizes.filter(F.col("__bs") > (cap if cap is not None else 1)).select(
             "bkt"
         )
-        if materialize:
-            # both self-join branches derive from `pre`, so Catalyst
-            # would compile (and run) the size aggregation once per
-            # branch; a lazy checkpoint of the tiny hot list makes
-            # the second branch read materialized blocks instead
-            # (the copurchase_edges pair-orientation pattern).
-            # materialize=False exists ONLY for the un-truncated twin
-            # plan pin in tests (the t24 pattern).
-            hot = hot.localCheckpoint(eager=False)
+        # both self-join branches derive from `pre`, so Catalyst
+        # would compile (and run) the size aggregation once per
+        # branch; a lazy checkpoint of the tiny hot list makes the
+        # second branch read materialized blocks instead (the
+        # copurchase_edges pair-orientation pattern)
+        hot = hot.localCheckpoint(eager=False)
         pre = pre.join(F.broadcast(hot), "bkt", "left_anti")
     a = spread_small_input(pre).select(
         "bkt",
@@ -627,8 +603,14 @@ def bucketed_neardup_pairs(
     sim = F.round(
         vdot(F.col("vec_a"), F.col("vec_b")) / (F.col("__na") * F.col("__nb")), 4
     )
+    # broadcast build side, spread probe side: the probe keeps its
+    # scan partitioning, so the post-join pair blow-up runs on every
+    # core. A shuffle join caps parallelism at the bucket count, and
+    # AQE coalesces its tiny pre-blow-up shuffle to ~1 partition (the
+    # m_b^2 expansion happens after the exchange, invisible to AQE):
+    # measured 8x slower on a 10-cell fixture
     return (
-        a.join(F.broadcast(b) if broadcast_build else b, "bkt")
+        a.join(F.broadcast(b), "bkt")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cos_sim", sim)
         .filter(F.col("cos_sim") >= threshold)
@@ -1682,7 +1664,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     shingle_maxdf: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT C(A,B) = |A∩B| / |A| (Broder
     1997's 'containment', the companion measure to resemblance):
@@ -1698,7 +1679,7 @@ def containment_pairs(
     ((contained, container) per direction clearing the threshold).
     The directed expansion happens AFTER the pair aggregation — 2
     rows per pair, never 2x the index."""
-    sh, sizes = _distinct_shingle_hashes(df, id_col, text_col, n, materialize)
+    sh, sizes = _distinct_shingle_hashes(df, id_col, text_col, n)
     freq = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df_sh"))
     keep = F.col("df_sh") >= 2
     if shingle_maxdf is not None:

@@ -18,6 +18,7 @@ Correctness rules observed throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +48,17 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def _gate_dir() -> str:
+    """The table directory the generated-literal oracles (ss3, ss9,
+    t13, t13b, t17, s16) replay their training or path lookup on, so
+    the literals match the tables the engine side runs over. Read
+    from $DOT_SPARK_GATE_SF_DIR, which tools/oracle_check.py exports
+    to the sf_dir it checks and tests/conftest.py (like
+    perfbench/run.py) sets before this module is imported; defaults
+    to the driver's gate scale."""
+    return os.environ.get("DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01").rstrip("/")
 
 
 _SCRATCH_ROOT: list[str] = []
@@ -3255,28 +3267,22 @@ def _ss3_oracle_sql() -> str | None:
 
     SCOPE: the literals ARE one corpus's training output, so the
     comparison is only defined where oracle and engine see the SAME
-    table. The build reads $DOT_SPARK_GATE_SF_DIR, defaulting to the
-    driver's gate scale (sf0.01) — the one place the official
-    comparison runs; tools/oracle_check.py exports the env var to
-    whatever sf_dir it is checking, so a local gate replica at any
-    other scale regenerates matching literals instead of false-
-    mismatching against frozen sf0.01 centroids. Returns None
-    (rows-only fallback) when the table is not on disk."""
-    import os
-
+    table. The build reads _gate_dir(), so a gate run at any scale
+    regenerates matching literals instead of false-mismatching
+    against frozen sf0.01 centroids. Returns None when the table is
+    not on disk: ss3 then has no ORACLE entry, which
+    tests/test_contract.py::test_oracle_keys_subset_of_queries
+    reports as a failure."""
     import numpy as np
 
     from dot_spark.operators.similarity import spherical_kmeans
 
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
     try:
         import duckdb
 
         sample = duckdb.sql(
             "SELECT embedding FROM "
-            f"read_parquet('{gate_dir}/embeddings.parquet') "
+            f"read_parquet('{_gate_dir()}/embeddings.parquet') "
             "ORDER BY vec_id LIMIT 1024"
         ).fetchall()
     except Exception:
@@ -3337,9 +3343,6 @@ def ss3_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_search(q, emb, cents, k=10, nprobe=3)
 
 
-# no SQL oracle: seeded-Gaussian hyperplanes are not SQL-expressible —
-# rows-only here; the exactness invariant (full Hamming probe ==
-# brute force) is tested in tests/test_textops.py
 def _ss4_oracle_sql() -> str:
     """ss4's full SQL oracle: the hyperplanes and multi-probe masks
     are seeded constants, so they embed as literals — the oracle
@@ -3670,25 +3673,20 @@ def _ss9_oracle_sql() -> str | None:
     pool, and the exact cosine re-rank.
 
     SCOPE: same as ss3 — the literals are one corpus's training
-    output, so the build reads $DOT_SPARK_GATE_SF_DIR (default the
-    driver's gate scale, sf0.01); tools/oracle_check.py exports the
-    var for local runs at other scales. Returns None (rows-only
-    fallback) when the table is not on disk."""
-    import os
-
+    output, so the build reads _gate_dir(). Returns None when the
+    table is not on disk: ss9 then has no ORACLE entry, which
+    tests/test_contract.py::test_oracle_keys_subset_of_queries
+    reports as a failure."""
     import numpy as np
 
     from dot_spark.operators.similarity import _fold_dot, pq_kmeans
 
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
     try:
         import duckdb
 
         sample = duckdb.sql(
             "SELECT embedding FROM "
-            f"read_parquet('{gate_dir}/embeddings.parquet') "
+            f"read_parquet('{_gate_dir()}/embeddings.parquet') "
             "ORDER BY vec_id LIMIT 1024"
         ).fetchall()
     except Exception:
@@ -7062,14 +7060,9 @@ def _t13_oracle_sql() -> str | None:
     fold) over the same gate-scale corpus read via DuckDB, and embeds
     the learned merge table as literals. Any divergence in pair
     counting, tie-breaking, or the greedy fuse breaks the hash.
-    Reads $DOT_SPARK_GATE_SF_DIR (the oracle_check convention) so a
-    replica run at another scale regenerates matching literals."""
-    import os
-
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
-    cached = _gate_corpus_bpe(gate_dir)
+    Reads _gate_dir(), so a run at another scale regenerates
+    matching literals."""
+    cached = _gate_corpus_bpe(_gate_dir())
     if cached is None:
         return None
     _, rows = cached
@@ -7113,12 +7106,7 @@ def _t13b_oracle_sql() -> str | None:
     pair counting, tie-breaking, the disjointness rule, the scan
     bound, or the fuse breaks the hash. Shares the memoized corpus
     fetch with _t13_oracle_sql."""
-    import os
-
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
-    cached = _gate_corpus_bpe(gate_dir)
+    cached = _gate_corpus_bpe(_gate_dir())
     if cached is None:
         return None
     rows, _ = cached
@@ -7171,12 +7159,7 @@ def _t17_oracle_sql() -> str | None:
     literals. Any divergence in training, the greedy fuse, word
     normalization, or the count rollup breaks the hash. Shares the
     memoized corpus fetch + training pass with _t13_oracle_sql."""
-    import os
-
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
-    cached = _gate_corpus_bpe(gate_dir)
+    cached = _gate_corpus_bpe(_gate_dir())
     if cached is None:
         return None
     rows, trained = cached
@@ -7743,17 +7726,12 @@ def dd12_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     """,
 )
-def t15_unigram_lm_score(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def t15_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram language-model quality scoring (the KenLM-shaped
     signal without a trained LM): token log-probabilities from the
     corpus's own unigram distribution, averaged per doc as a
     perplexity proxy — high avg negative log-prob = rare-token-heavy
-    (noisy) text. ``materialize=False`` skips the checkpoint ONLY so
-    the un-truncated plan twin can be pinned (the t24 pattern); the
-    production path always checkpoints. Scale shape: the corpus is
-    tokenized TWICE — once
+    (noisy) text. Scale shape: the corpus is tokenized TWICE — once
     materializing the |vocab|-row frequency table (broadcast back,
     grand total derived from it) and once as the scoring probe side;
     a broadcast probe shares no exchange, so ReuseExchange cannot
@@ -7772,8 +7750,7 @@ def t15_unigram_lm_score(
     # the corpus explode+aggregate compiles once, not per branch
     # (measured 1.7x at sf0.1; the t24/t26/dd4b pattern)
     freq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    if materialize:
-        freq = freq.localCheckpoint(eager=False)
+    freq = freq.localCheckpoint(eager=False)
     total = freq.agg(F.sum("cnt").alias("n"))
     scored = (
         terms.join(F.broadcast(freq), "term")
@@ -7874,19 +7851,13 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _s16_oracle_sql() -> str:
     """s16's oracle reads the SAME parquet with DuckDB's
     filename=true. The path is resolved at oracle-build time from
-    $DOT_SPARK_GATE_SF_DIR (the ss3/t13 convention, defaulting to
-    the driver's gate scale), since the registered views carry no
-    file provenance."""
-    import os
-
-    gate_dir = os.environ.get(
-        "DOT_SPARK_GATE_SF_DIR", "/root/testdata/sf0.01"
-    ).rstrip("/")
+    _gate_dir(), since the registered views carry no file
+    provenance."""
     return f"""
     SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(l_orderkey) AS BIGINT) AS sum_keys
-    FROM read_parquet('{gate_dir}/lineitem.parquet', filename=true)
+    FROM read_parquet('{_gate_dir()}/lineitem.parquet', filename=true)
     GROUP BY 1
     """
 
@@ -9177,9 +9148,7 @@ def ss10_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     """,
 )
-def t23_bigram_lm_score(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def t23_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram language-model scoring with add-k smoothing (k=0.5) —
     the sequence-aware upgrade of t15's unigram proxy: per-doc mean
     negative log-probability of each adjacent token pair under
@@ -9205,11 +9174,8 @@ def t23_bigram_lm_score(
     # collect: the collect is uc's first action, so the checkpoint
     # lands then and the scoring join below reads materialized rows
     # instead of re-compiling the corpus explode (t15's discipline)
-    # (materialize=False exists ONLY for the un-truncated twin plan
-    # pin in tests/test_plans.py — the t24 pattern)
     uc = terms.groupBy("term").agg(F.count(F.lit(1)).alias("c1"))
-    if materialize:
-        uc = uc.localCheckpoint(eager=False)
+    uc = uc.localCheckpoint(eager=False)
     # |V| is one scalar — collect it (the _zorder_rows extent
     # pattern); a crossJoin'd 1-row aggregate would replay the token
     # explode under the scoring branch
@@ -9287,9 +9253,7 @@ def t23_bigram_lm_score(
     FROM scored
     """,
 )
-def t27_kneser_ney_score(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def t27_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram scoring — the industry-standard
     n-gram smoothing (Kneser & Ney 1995; Chen & Goodman 1998's
     interpolated form, the smoothing KenLM defaults to), upgrading
@@ -9306,15 +9270,15 @@ def t27_kneser_ney_score(
     "San", so its continuation probability is tiny).
 
     Shape: ONE pair explode feeds everything. The bigram-TYPE table
-    bc materializes once (checkpoint gated on `materialize`, the
-    t24/dd4b pattern — it feeds the scoring join plus THREE derived
-    stats) and is |types|-bounded; the history (h) and continuation
-    (cont) tables derive from bc with map-side partials and broadcast
-    back onto the pair stream (hints gated on the collected type
-    count, t23's discipline); N1+(. .) is one collected scalar. Every
-    probability is a fixed-parenthesization expression over exact
-    integer counts, so both engines take ln of identical doubles; the
-    per-doc mean rounds to 3 dp (t15's summation-order discipline).
+    bc materializes once (the t24/dd4b pattern — it feeds the scoring
+    join plus THREE derived stats) and is |types|-bounded; the history
+    (h) and continuation (cont) tables derive from bc with map-side
+    partials and broadcast back onto the pair stream (hints gated on
+    the collected type count, t23's discipline); N1+(. .) is one
+    collected scalar. Every probability is a fixed-parenthesization
+    expression over exact integer counts, so both engines take ln of
+    identical doubles; the per-doc mean rounds to 3 dp (t15's
+    summation-order discipline).
     Every pair is seen in its own corpus, so c12 >= 1 and the first
     term >= 0.25/c(w1 .) — ln is always finite."""
     from dot_spark.operators.textdedup import normalize_text
@@ -9332,11 +9296,10 @@ def t27_kneser_ney_score(
         ).alias("s"),
     ).select("doc_id", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2"))
     bc = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    if materialize:
-        # |bigram types| rows feeding four consumers (scoring join,
-        # h, cont, the type-count scalar) — materialize so the pair
-        # explode+aggregate compiles once, not per branch
-        bc = bc.localCheckpoint(eager=False)
+    # |bigram types| rows feeding four consumers (scoring join, h,
+    # cont, the type-count scalar) — materialize so the pair
+    # explode+aggregate compiles once, not per branch
+    bc = bc.localCheckpoint(eager=False)
     n_types = bc.agg(F.count(F.lit(1))).first()[0]
     h = bc.groupBy("w1").agg(
         F.sum("c12").alias("c1dot"), F.count(F.lit(1)).alias("n1p_w1")

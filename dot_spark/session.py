@@ -88,14 +88,4 @@ def get_spark(app_name: str = "dot_spark", shuffle_partitions: int | None = None
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.ui.enabled", "false")
     )
-    # optional override for harnesses whose inputs are tiny local
-    # collections (the test suite): spark.default.parallelism sizes
-    # sc.parallelize slices, so a 50-row createDataFrame otherwise
-    # schedules local[N]-many tasks per stage — measured 642 -> 354
-    # ms/action at N=32 vs 8 on sf0.001-sized frames. UNSET in
-    # production and in bench.py (the driver contract): scans and
-    # shuffles there are sized by the data, not by this.
-    dp = os.environ.get("DOT_SPARK_DEFAULT_PARALLELISM")
-    if dp:
-        builder = builder.config("spark.default.parallelism", dp)
     return builder.getOrCreate()

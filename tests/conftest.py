@@ -1,9 +1,11 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -19,23 +21,31 @@ os.environ["DOT_SPARK_GATE_SF_DIR"] = SF_TEST_DIR
 
 @pytest.fixture(scope="session")
 def spark():
-    # the TEST session runs 8 shuffle partitions (env-overridable):
-    # the suite's thousands of tiny sf0.001 jobs are scheduler-bound
-    # at the production default (32), and shuffle width is orthogonal
-    # to every correctness property the suite checks — measured 1.7x
-    # on the property suite (r15; the driver's verify budget is the
-    # contract this protects). bench.py / the driver contract keep
-    # their own session and are untouched by this.
-    # tiny local collections otherwise schedule local[32]-many tasks
-    # per stage (see session.py) — measured ~2x per action at 8
-    os.environ.setdefault("DOT_SPARK_DEFAULT_PARALLELISM", "8")
-    s = get_spark(
-        "dot_spark_tests",
-        shuffle_partitions=int(
-            os.environ.get("DOT_SPARK_TEST_SHUFFLE_PARTITIONS", "8")
-        ),
-    )
+    # the TEST session runs 8 shuffle partitions: the suite's
+    # thousands of tiny sf0.001 jobs are scheduler-bound at a 32-wide
+    # default, and shuffle width is orthogonal to every correctness
+    # property the suite checks — measured 1.7x on the property suite
+    # on 32 cores. bench.py / the driver contract keep their own
+    # session and are untouched by this.
+    s = get_spark("dot_spark_tests", shuffle_partitions=8)
     yield s
+
+
+@contextlib.contextmanager
+def unmaterialized():
+    """Make DataFrame.localCheckpoint return its input while active.
+
+    Production builders checkpoint shared subtrees, and a checkpoint
+    truncates the executed plan to a LogicalRDD stub. A plan pin that
+    must see the hidden subtree builds its twin inside this block and
+    the production frame outside it; a checkpoint never changes rows,
+    so the two must agree row for row."""
+    saved = DataFrame.localCheckpoint
+    DataFrame.localCheckpoint = lambda self, *args, **kwargs: self
+    try:
+        yield
+    finally:
+        DataFrame.localCheckpoint = saved
 
 
 @pytest.fixture(scope="session")

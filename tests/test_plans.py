@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dot_spark.queries import QUERIES
+from tests.conftest import unmaterialized
 
 # Queries allowed to leave the JVM: multimodal decode/feature UDFs
 # (stubbed image/audio libs, mapInPandas plumbing is the point), HMAC
@@ -629,15 +630,16 @@ def test_p20_zorder_rank_avoids_global_sort_window(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Un-truncated twin plan pins (the t24/t20 pattern, extended per the
-# r11 verdict): production plans of checkpointing operators truncate
-# to a LogicalRDD stub, so the committed baseline cannot watch their
-# internal subtrees. Each operator exposes a materialize=False twin
-# (or an extracted per-round body for the iterative family) whose
-# FULL shape is pinned here, plus a twin-vs-production row-equality
-# assert — a lost broadcast or a resurrected shuffle inside the
-# hidden subtree fails loudly even though the production plan hides
-# it. dd4b/t24/t20's twins live in tests/test_textops.py.
+# Un-truncated twin plan pins: production plans of checkpointing
+# operators truncate to a LogicalRDD stub, so the committed baseline
+# cannot watch their internal subtrees. Each twin is the production
+# builder called inside conftest.unmaterialized(), where
+# localCheckpoint returns its input (the iterative family pins an
+# extracted per-round body instead). The twin's FULL shape is pinned
+# here, plus a twin-vs-production row-equality assert — a lost
+# broadcast or a resurrected shuffle inside the hidden subtree fails
+# loudly even though the production plan hides it. The twins of
+# pmi, perplexity prune, dd4b and dd15 live in tests/test_textops.py.
 # ---------------------------------------------------------------------------
 
 
@@ -649,7 +651,8 @@ def test_t15_unigram_lm_unmaterialized_twin(spark, sf_dir):
     from dot_spark.queries import t15_unigram_lm_score
     from tools.plan_baseline import plan_counts
 
-    twin = t15_unigram_lm_score(spark, sf_dir, materialize=False)
+    with unmaterialized():
+        twin = t15_unigram_lm_score(spark, sf_dir)
     counts = plan_counts(twin)
     assert counts["scans"] <= 3, counts
     assert counts["exchanges"] <= 6, counts
@@ -669,7 +672,8 @@ def test_t23_bigram_lm_unmaterialized_twin(spark, sf_dir):
     from dot_spark.queries import t23_bigram_lm_score
     from tools.plan_baseline import plan_counts
 
-    twin = t23_bigram_lm_score(spark, sf_dir, materialize=False)
+    with unmaterialized():
+        twin = t23_bigram_lm_score(spark, sf_dir)
     counts = plan_counts(twin)
     assert counts["scans"] <= 2, counts
     assert counts["exchanges"] <= 4, counts
@@ -691,7 +695,8 @@ def test_t26_dsir_unmaterialized_twin(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     flag = F.col("lang") == "en"
-    twin = dsir_importance(docs, flag, materialize=False)
+    with unmaterialized():
+        twin = dsir_importance(docs, flag)
     counts = plan_counts(twin)
     assert counts["scans"] <= 3, counts
     assert counts["exchanges"] <= 6, counts
@@ -713,9 +718,8 @@ def test_dd5b_hot_cap_unmaterialized_twin(spark, sf_dir):
     from tools.plan_baseline import plan_counts
 
     emb = load_table(spark, "embeddings", sf_dir)
-    twin = bucketed_neardup_pairs(
-        emb, "label", threshold=0.95, max_bucket=1000, materialize=False
-    )
+    with unmaterialized():
+        twin = bucketed_neardup_pairs(emb, "label", threshold=0.95, max_bucket=1000)
     counts = plan_counts(twin)
     assert counts["scans"] <= 4, counts
     assert counts["exchanges"] <= 6, counts
@@ -855,7 +859,8 @@ def test_t27_kneser_ney_unmaterialized_twin(spark, sf_dir):
     from dot_spark.queries import t27_kneser_ney_score
     from tools.plan_baseline import plan_counts
 
-    twin = t27_kneser_ney_score(spark, sf_dir, materialize=False)
+    with unmaterialized():
+        twin = t27_kneser_ney_score(spark, sf_dir)
     counts = plan_counts(twin)
     assert counts["scans"] <= 4, counts
     assert counts["exchanges"] <= 9, counts

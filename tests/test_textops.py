@@ -23,6 +23,7 @@ from dot_spark.operators.textdedup import (
     simhash_signature,
 )
 from dot_spark.sources.registry import load_table
+from tests.conftest import unmaterialized
 
 
 @pytest.fixture(scope="module")
@@ -1038,7 +1039,9 @@ def test_perplexity_prune_unmaterialized_plan_pin(spark, docs):
     from dot_spark.operators.text import perplexity_prune
     from tools.plan_baseline import plan_counts
 
-    counts = plan_counts(perplexity_prune(docs, materialize=False))
+    with unmaterialized():
+        twin = perplexity_prune(docs)
+    counts = plan_counts(twin)
     assert counts["scans"] <= 6, counts
     assert counts["exchanges"] <= 14, counts
     assert counts["py_eval"] == 0, counts
@@ -1046,7 +1049,7 @@ def test_perplexity_prune_unmaterialized_plan_pin(spark, docs):
     # nested-loop sites
     assert counts["nested_loop"] <= 3, counts
     # and the two forms agree row-for-row
-    a = {tuple(r) for r in perplexity_prune(docs, materialize=False).collect()}
+    a = {tuple(r) for r in twin.collect()}
     b = {tuple(r) for r in perplexity_prune(docs).collect()}
     assert a == b
 
@@ -1074,13 +1077,15 @@ def test_pmi_collocations_unmaterialized_plan_pin(spark, docs):
     from dot_spark.operators.text import pmi_collocations
     from tools.plan_baseline import plan_counts
 
-    counts = plan_counts(pmi_collocations(docs, materialize=False))
+    with unmaterialized():
+        twin = pmi_collocations(docs)
+    counts = plan_counts(twin)
     assert counts["scans"] <= 5, counts
     assert counts["exchanges"] <= 13, counts
     assert counts["py_eval"] == 0, counts
     assert counts["nested_loop"] <= 2, counts
     # the two forms agree row-for-row
-    a = {tuple(r) for r in pmi_collocations(docs, materialize=False).collect()}
+    a = {tuple(r) for r in twin.collect()}
     b = {tuple(r) for r in pmi_collocations(docs).collect()}
     assert a == b
 
@@ -1096,20 +1101,37 @@ def test_ngram_jaccard_unmaterialized_plan_pin(spark, docs):
     from dot_spark.operators.textdedup import ngram_jaccard_pairs
     from tools.plan_baseline import plan_counts
 
-    counts = plan_counts(
-        ngram_jaccard_pairs(docs, shingle_maxdf=50, materialize=False)
-    )
+    with unmaterialized():
+        twin = ngram_jaccard_pairs(docs, shingle_maxdf=50)
+    counts = plan_counts(twin)
     assert counts["scans"] <= 6, counts
     assert counts["exchanges"] <= 22, counts
     assert counts["py_eval"] == 0, counts
     assert counts["nested_loop"] == 0, counts
-    a = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            docs, shingle_maxdf=50, materialize=False
-        ).collect()
-    }
+    a = {tuple(r) for r in twin.collect()}
     b = {tuple(r) for r in ngram_jaccard_pairs(docs, shingle_maxdf=50).collect()}
+    assert a == b
+
+
+def test_containment_unmaterialized_plan_pin(spark, docs):
+    """dd15 shares dd4b's distinct-shingle checkpoint, which hides
+    the normalize+explode+distinct pipeline from the committed
+    baseline. Pin the UNCHECKPOINTED twin: a per-branch
+    re-tokenization, a lost exchange reuse or a Python boundary in
+    the hidden subtree grows these counts and fails loudly."""
+    from dot_spark.operators.textdedup import containment_pairs
+    from tools.plan_baseline import plan_counts
+
+    kw = dict(n=3, threshold=0.5, shingle_maxdf=40)
+    with unmaterialized():
+        twin = containment_pairs(docs, **kw)
+    counts = plan_counts(twin)
+    assert counts["scans"] <= 6, counts
+    assert counts["exchanges"] <= 22, counts
+    assert counts["py_eval"] == 0, counts
+    assert counts["nested_loop"] == 0, counts
+    a = {tuple(r) for r in twin.collect()}
+    b = {tuple(r) for r in containment_pairs(docs, **kw).collect()}
     assert a == b
 
 
