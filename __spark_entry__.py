@@ -32,6 +32,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per queries() key (omitted keys get the
-    weaker rows-only check)."""
+    """DuckDB-equivalent SQL for every queries() key (the two key
+    sets are equal)."""
     return dict(ORACLE)

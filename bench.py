@@ -5,6 +5,13 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+It is also the one query timer; each query's time is its minimum over
+$DOT_SPARK_BENCH_ROUNDS interleaved rounds (default 3):
+
+    python bench.py [query ...]   # the named queries (default: HEADLINE)
+    python bench.py --all         # every registered query
+    python bench.py --ab REF      # interleaved A/B against a git ref
+
 Each query materializes through the "noop" sink so the whole plan
 executes (count() alone would let Catalyst prune work).
 """
@@ -119,8 +126,7 @@ HEADLINE = [
     # corpus build is the engine's user story and sat at ~52 s
     # OUTSIDE the headline for multiple rounds before the r13 cost
     # sweep caught its pushdown pathology (now ~7-9 s, mid-pack and
-    # CI-gated). Driver-tracked round-over-round from here on; the
-    # common-subset comparison block absorbs the composition change.
+    # CI-gated).
     "pl7_corpus_build_pipeline",
     # pl17 (the composed soft corpus build) is deliberately NOT a
     # headline row. r13 cut it from ~31 s to ~7 s at sf0.1 (the
@@ -157,46 +163,6 @@ EAGER_BUILD = {
     # measure a cached-scan tail
     "pl7_corpus_build_pipeline",
 }
-
-# Round-over-round comparison target: the NEWEST BENCH_r*.json in
-# the repo that carries parsed per-query timings (a crashed round —
-# e.g. r04, rc=1 — has none and is skipped). Auto-detecting rolls the
-# target forward every round without a stale hard-coded constant;
-# "common_subset" below sums only queries present in BOTH rounds so
-# suite growth never makes totals apples-to-oranges.
-def _latest_prev_bench() -> tuple[str | None, dict[str, float], set[str]]:
-    """(artifact name, numeric per-query timings, ALL query names).
-    The name set includes err'd entries so added_since/removed_since
-    reflect genuine suite changes, not queries that merely crashed
-    last round; the timings dict excludes them so totals stay sums of
-    numbers."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    import glob
-    import re
-
-    # Sort by the NUMERIC round — lexicographic order only works while
-    # round numbers stay zero-padded two digits (an unpadded
-    # BENCH_r7.json would outrank r10..r99, and r100+ breaks entirely).
-    def round_no(p: str) -> int:
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(p))
-        return int(m.group(1)) if m else -1
-
-    candidates = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")), key=round_no, reverse=True
-    )
-    for path in candidates:
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        q = (d.get("parsed") or {}).get("queries") or d.get("queries")
-        if isinstance(q, dict) and q:
-            name = os.path.splitext(os.path.basename(path))[0]
-            timings = {k: v for k, v in q.items() if isinstance(v, (int, float))}
-            return name, timings, set(q)
-    return None, {}, set()
-
 
 def _box_snapshot() -> dict:
     """Load average + cumulative CPU steal/total ticks at this
@@ -250,7 +216,7 @@ def _run_ab(ref: str) -> None:
     measures.
 
     Prints ONE JSON line with an "ab" block: per-query {head, ref}
-    mins, the common-subset totals and ratio, per-run steal
+    mins, the totals and ratio over those queries, per-run steal
     telemetry, and the run order — a machine-readable noise
     adjudication receipt instead of a NOTES narrative.
     """
@@ -289,7 +255,7 @@ def _run_ab(ref: str) -> None:
         )
 
     env = dict(os.environ)
-    env["DOT_SPARK_BENCH_ROUNDS"] = env.get("DOT_SPARK_AB_CHILD_ROUNDS", "2")
+    env["DOT_SPARK_BENCH_ROUNDS"] = "2"
     env["DOT_SPARK_BENCH_MAX_EXTRA"] = "0"
 
     def one_run(side_dir: str) -> tuple[dict[str, float], float | None]:
@@ -362,7 +328,7 @@ def _run_ab(ref: str) -> None:
                     },
                     "head_only": sorted(set(best["head"]) - set(best["ref"])),
                     "ref_only": sorted(set(best["ref"]) - set(best["head"])),
-                    "common_subset": {
+                    "totals": {
                         "n_queries": len(common),
                         "head_total": head_total,
                         "ref_total": ref_total,
@@ -378,10 +344,16 @@ def _run_ab(ref: str) -> None:
     )
 
 
-def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--ab":
-        _run_ab(sys.argv[2])
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    if len(args) >= 2 and args[0] == "--ab":
+        _run_ab(args[1])
         return
+    names = list(QUERIES) if args == ["--all"] else args or HEADLINE
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        print(f"bench.py: unknown query: {' '.join(unknown)}", file=sys.stderr)
+        raise SystemExit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark("dot_spark_bench")
@@ -411,7 +383,6 @@ def main() -> None:
     # least n_rounds clean-ish samples instead of depending on
     # driver-box luck. The artifact records how many retries fired.
     max_extra = int(os.environ.get("DOT_SPARK_BENCH_MAX_EXTRA", "2"))
-    names = [n for n in HEADLINE if n in QUERIES]
     best: dict[str, float] = {}
     errors: dict[str, str] = {}
     round_marks = [_box_snapshot()]  # box state before round 1
@@ -446,8 +417,6 @@ def main() -> None:
         timings[name] = {"err": err}
 
     total = round(sum(v for v in best.values()), 3)
-    prev_name, prev_queries, prev_names = _latest_prev_bench()
-    common = [n for n in names if n in best and n in prev_queries]
     print(
         json.dumps(
             {
@@ -471,14 +440,6 @@ def main() -> None:
                         _steal_pct(round_marks[i], round_marks[i + 1])
                         for i in range(len(round_marks) - 1)
                     ],
-                },
-                "common_subset": {
-                    "vs": prev_name,
-                    "n_queries": len(common),
-                    "total": round(sum(best[n] for n in common), 3),
-                    "prev_total": round(sum(prev_queries[n] for n in common), 3),
-                    "added_since": sorted(set(names) - prev_names),
-                    "removed_since": sorted(prev_names - set(names)),
                 },
             }
         )

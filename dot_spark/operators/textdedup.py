@@ -40,28 +40,11 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     stages downstream.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        # metadata-only check: df.rdd.getNumPartitions() would force
-        # AQE plan materialization, which is NOT free
-        few_splits = len(df.inputFiles()) < target
-    except Exception:
-        # non-file-backed plan: spread only when every leaf is a
-        # truly-local relation (tests, createDataFrame, literal
-        # sources). A DERIVED distributed plan that merely fails
-        # inputFiles() keeps its existing partitioning — the old
-        # unconditional fallback could COALESCE an already-wide
-        # input to defaultParallelism and shuffle full rows for
-        # nothing. Still metadata-only: collectLeaves walks the
-        # analyzed plan, no execution. Leaf classes match by exact
-        # name (pinned in tests/test_dedup.py).
-        try:
-            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-            few_splits = all(
-                leaves.apply(i).nodeName() in {"LocalRelation", "OneRowRelation"}
-                for i in range(leaves.size())
-            )
-        except Exception:
-            few_splits = True
+    # metadata-only check: df.rdd.getNumPartitions() would force AQE
+    # plan materialization, which is NOT free. A plan with no file
+    # leaves (createDataFrame, `select 1`) reports no input files and
+    # spreads.
+    few_splits = len(df.inputFiles()) < target
     return df.repartition(target) if few_splits else df
 
 

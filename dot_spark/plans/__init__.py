@@ -12,8 +12,11 @@ tools/plan_report.py CLI) can assert them instead of eyeballing
 from dot_spark.plans.audit import (
     audit,
     count_exchanges,
+    final_plan,
     has_python_eval,
     physical_plan,
+    plan_counts,
+    plan_counts_str,
     pushed_filters,
     read_schemas,
 )
@@ -21,8 +24,11 @@ from dot_spark.plans.audit import (
 __all__ = [
     "audit",
     "count_exchanges",
+    "final_plan",
     "has_python_eval",
     "physical_plan",
+    "plan_counts",
+    "plan_counts_str",
     "pushed_filters",
     "read_schemas",
 ]

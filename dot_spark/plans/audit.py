@@ -25,9 +25,64 @@ JOIN_NODES = (
 )
 
 
-def physical_plan(df: DataFrame) -> str:
-    """The executed (pre-AQE-finalization) physical plan string."""
+# how AQE's root node prints once the frame's own action has run
+_FINAL_ROOT = "AdaptiveSparkPlan isFinalPlan=true"
+
+
+def _executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def physical_plan(df: DataFrame) -> str:
+    """The executed physical plan string, read before any action.
+
+    Once the frame has run an action, AQE prints its final plan and its
+    initial plan together, so every node count doubles (a scalar
+    subquery's nested adaptive plan adds a third copy). Such a read
+    raises instead of returning inflated counts. Only the root is
+    checked: a materialized cache under a fresh frame prints its own
+    stored plan as final, and that is not a read after this frame's
+    action."""
+    plan = _executed_plan(df)
+    if plan.startswith(_FINAL_ROOT):
+        raise ValueError(
+            "physical plan read after the frame ran an action "
+            "(isFinalPlan=true); read the plan before the action"
+        )
+    return plan
+
+
+def final_plan(df: DataFrame) -> str:
+    """AQE's final plan string, printed above the initial plan, read
+    after the frame's own action (collect()) for the decisions AQE
+    makes at runtime, such as skew splits. Raises if the frame has not
+    run an action, since the string would hold the initial plan only."""
+    plan = _executed_plan(df)
+    if not plan.startswith(_FINAL_ROOT):
+        raise ValueError(
+            "no final plan yet: run an action on this frame (collect()) "
+            "before reading its final plan"
+        )
+    return plan
+
+
+def plan_counts_str(plan: str) -> dict:
+    """Node counts that define a plan's scale shape: every `Exchange`
+    substring (the committed baselines use this rule; see
+    count_exchanges for shuffles only), file scans, Python-eval
+    boundaries and nested-loop joins."""
+    return {
+        "exchanges": plan.count("Exchange"),
+        "scans": plan.count("FileScan"),
+        "py_eval": sum(plan.count(n) for n in PY_EVAL_NODES),
+        "nested_loop": plan.count("BroadcastNestedLoopJoin")
+        + plan.count("CartesianProduct"),
+    }
+
+
+def plan_counts(df: DataFrame) -> dict:
+    """plan_counts_str of the frame's physical plan."""
+    return plan_counts_str(physical_plan(df))
 
 
 def count_exchanges(plan: str) -> int:

@@ -7821,6 +7821,7 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream join/groupBy on the key at 100 TB. The oracle is the
     plain declarative join — layout must never change results."""
     from dot_spark.loads import Warehouse
+    from dot_spark.plans import physical_plan
 
     wh = Warehouse(spark, _scratch("dot_spark_bk_"))
     o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
@@ -7840,7 +7841,7 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("l_linenumber").alias("n_lines"),
         F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     if "Exchange" in plan:
         raise AssertionError(
             "bucketed join/groupBy regressed to a shuffle plan:\n" + plan

@@ -90,6 +90,7 @@ def _registry(spark, sf_dir):
     # contract+plans — the eager queries' own jobs already fill the
     # box), so serial keeps the old per-test isolation for free
     if not hasattr(_registry, "value"):
+        from dot_spark.plans import physical_plan
         from dot_spark.queries import QUERIES
 
         # a cached subtree would leak InMemoryTableScan nodes into the
@@ -98,10 +99,7 @@ def _registry(spark, sf_dir):
             "catalog cache not empty at registry build"
         )
         dfs = {name: fn(spark, sf_dir) for name, fn in QUERIES.items()}
-        plans = {
-            name: df._jdf.queryExecution().executedPlan().toString()
-            for name, df in dfs.items()
-        }
+        plans = {name: physical_plan(df) for name, df in dfs.items()}
         _registry.value = (dfs, plans)
     return _registry.value
 

@@ -169,18 +169,22 @@ def test_bench_isolates_per_query_failures(spark, sf_dir, monkeypatch, capsys):
     def boom(spark, sf_dir):
         raise RuntimeError("synthetic bench failure")
 
-    monkeypatch.setattr(bench, "HEADLINE", ["s1_scan_projection", "zz_broken"])
     monkeypatch.setattr(
         bench, "QUERIES", {**bench.QUERIES, "zz_broken": boom}
     )
     monkeypatch.setenv("DOT_SPARK_BENCH_ROUNDS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
-    bench.main()
+    bench.main(["s1_scan_projection", "zz_broken"])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["n_errors"] == 1
     assert "synthetic bench failure" in out["queries"]["zz_broken"]["err"]
     assert isinstance(out["queries"]["s1_scan_projection"], float)
     assert out["value"] > 0
+    # a name the registry does not know exits non-zero and is named
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["s1_scan_projection", "zz_unregistered"])
+    assert exc.value.code != 0
+    assert "zz_unregistered" in capsys.readouterr().err
 
 
 def test_all_query_outputs_are_scalar_typed(registry_dfs):

@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from dot_spark.operators.dedup import dedupe_keep_latest, superseded_latest
+from dot_spark.plans import physical_plan
 
 T0 = dt.datetime(2024, 1, 1)
 T1 = dt.datetime(2024, 1, 2)
@@ -66,7 +68,7 @@ def test_plan_is_single_shuffle(spark):
     # One window = one Exchange on the dedup keys; a second dedup on the
     # same keys must not add a second shuffle of the big side.
     df = make(spark, [("a", "g", T0, 1)])
-    plan = dedupe_keep_latest(df, ["id"], ["ts"])._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(dedupe_keep_latest(df, ["id"], ["ts"]))
     assert plan.count("Exchange") <= 1
 
 
@@ -345,39 +347,33 @@ def test_cc_star_round_count_logarithmic(spark):
     assert rounds_at[300] <= 12, rounds_at
 
 
-def test_spread_small_input_leaf_allowlist(spark, sf_dir, monkeypatch):
-    """spread_small_input classifies plans that report no input files
-    by their analyzed-plan leaves, matched by EXACT class name:
-    LocalRelation (pandas createDataFrame) and OneRowRelation
-    (`select 1`) spread; LogicalRDD (list createDataFrame) keeps its
-    partitioning. A parquet scan (LogicalRelation) is classified by
-    its inputFiles() count instead. The leaf branch runs only when
-    inputFiles() raises, so it is forced here."""
+def test_spread_small_input_by_input_files(spark, sf_dir, monkeypatch):
+    """spread_small_input classifies a plan by its inputFiles() count
+    alone. A parquet scan spreads only below defaultParallelism files;
+    plans with no file leaves (pandas and list createDataFrame,
+    `select 1`) report no input files and spread; an inputFiles() that
+    raises propagates instead of picking a fallback."""
     import pandas as pd
 
     from dot_spark.operators.textdedup import spread_small_input
 
-    def leaf_names(df):
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        return [leaves.apply(i).nodeName() for i in range(leaves.size())]
-
+    target = spark.sparkContext.defaultParallelism
     scan = spark.read.parquet(f"{sf_dir}/region.parquet")
-    assert leaf_names(scan) == ["LogicalRelation"]
     n_files = len(scan.inputFiles())
     assert n_files >= 1
-    target = spark.sparkContext.defaultParallelism
     assert (spread_small_input(scan) is not scan) == (n_files < target)
 
-    cases = [
-        (spark.createDataFrame(pd.DataFrame({"a": [1, 2]})), "LocalRelation", True),
-        (spark.sql("select 1 as a"), "OneRowRelation", True),
-        (spark.createDataFrame([(1,), (2,)], "a int"), "LogicalRDD", False),
-    ]
+    for df in (
+        spark.createDataFrame(pd.DataFrame({"a": [1, 2]})),
+        spark.sql("select 1 as a"),
+        spark.createDataFrame([(1,), (2,)], "a int"),
+    ):
+        assert df.inputFiles() == []
+        assert spread_small_input(df) is not df
 
     def no_files(self):
         raise RuntimeError("not file-backed")
 
     monkeypatch.setattr(type(scan), "inputFiles", no_files)
-    for df, leaf, spread in cases:
-        assert leaf_names(df) == [leaf]
-        assert (spread_small_input(df) is not df) == spread, leaf
+    with pytest.raises(RuntimeError, match="not file-backed"):
+        spread_small_input(scan)

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dot_spark.operators.graph import copurchase_edges, pagerank, triangle_count
+from dot_spark.plans import physical_plan
 
 
 def _edges_df(spark, pairs):
@@ -195,12 +196,7 @@ def test_multihop_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
     regression this pin exists to catch."""
     from dot_spark.queries import QUERIES
 
-    plan = (
-        QUERIES["j17_multihop_topk"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(QUERIES["j17_multihop_topk"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
 

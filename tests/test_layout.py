@@ -20,6 +20,7 @@ from dot_spark.operators.relational import (
     skyline,
 )
 from dot_spark.pipelines import mv_merge, mv_partials
+from dot_spark.plans import physical_plan
 
 
 def _py_spread(x: int) -> int:
@@ -74,12 +75,7 @@ def test_ranked_by_equals_global_row_number(spark):
 
 def test_ranked_by_plan_has_no_global_row_window(spark):
     df = spark.createDataFrame([(i, i) for i in range(100)], "v bigint, id bigint")
-    plan = (
-        ranked_by(df, "v", ["id"], bucket=F.col("v") % 256)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(ranked_by(df, "v", ["id"], bucket=F.col("v") % 256))
     # the only single-partition window allowed is over the 256
     # bucket totals; the row-level window must be hash-partitioned
     # by bucket
@@ -155,12 +151,7 @@ def test_bloom_prune_is_a_map_side_filter(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     words = [0] * 4096
     words[0] = -1
-    plan = (
-        bloom_prune(li, "l_orderkey", words)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(bloom_prune(li, "l_orderkey", words))
     assert "Exchange" not in plan, plan
     assert "Join" not in plan, plan
 
@@ -231,12 +222,7 @@ def test_skyline_ties_all_on_frontier(spark):
 
 def test_skyline_plan_has_no_nested_loop(spark, sf_dir):
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    plan = (
-        skyline(part, "p_retailprice", "p_size", "p_partkey")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(skyline(part, "p_retailprice", "p_size", "p_partkey"))
     # the 1-row extent broadcast is the only nested-loop allowed
     # (its subtree appears twice — once under the bucket totals,
     # once under the level table); there must be no per-row

@@ -14,6 +14,7 @@ from dot_spark.operators.multimodal import (
     sample_frames,
     synthesize_media,
 )
+from dot_spark.plans import physical_plan
 from dot_spark.sources.registry import load_table
 
 
@@ -335,7 +336,7 @@ def test_metadata_only_query_prunes_payload(media, spark, tmp_path):
     df = spark.read.parquet(p).filter(F.col("meta.kind") == "image").select(
         "media_id", "meta.width"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "payload" not in plan
 
 

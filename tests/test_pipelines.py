@@ -652,11 +652,11 @@ def test_pl17_composition_keeps_stage_shapes(spark, sf_dir):
     runs zero Python, and the accounting matches a from-parts
     replay (gate, then soft weights over survivors, then the sqrt
     mixture over exact decimal mass)."""
+    from dot_spark.plans import plan_counts
     from dot_spark.queries import (
         pl17_soft_corpus_build,
         t25_hashed_linear_quality,
     )
-    from tools.plan_baseline import plan_counts
 
     out = pl17_soft_corpus_build(spark, sf_dir)
     counts = plan_counts(out)

@@ -23,6 +23,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dot_spark.plans import (
+    final_plan,
+    has_python_eval,
+    physical_plan,
+    plan_counts,
+    plan_counts_str,
+)
 from dot_spark.queries import QUERIES
 from tests.conftest import unmaterialized
 
@@ -39,27 +46,19 @@ PYTHON_OK = {"mm1_decode_media", "mm2_media_features", "mm3_frame_sampling",
              "f8_hmac_sha256", "ss3_ivf_trained_topk", "ss4_lsh_topk",
              "ss9_pq_topk"}
 
-PY_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-                 "MapInPandas", "PythonMapInArrow")
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_scan_pushdown_reaches_parquet(spark, sf_dir):
-    plan = _plan(QUERIES["s1_scan_projection"](spark, sf_dir))
+    plan = physical_plan(QUERIES["s1_scan_projection"](spark, sf_dir))
     # the l_shipdate >= ... predicate must reach the reader so row
     # groups outside the range are skipped at 100 TB
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan, plan
 
 
 def test_scan_prunes_columns(spark, sf_dir):
-    plan = _plan(QUERIES["s1_scan_projection"](spark, sf_dir))
+    plan = physical_plan(QUERIES["s1_scan_projection"](spark, sf_dir))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     # 4 projected columns + the filter column; l_comment (the widest
     # column) must NOT be read
@@ -70,7 +69,7 @@ def test_scan_prunes_columns(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["j4_broadcast_lookup", "j1_anti_join", "j7_star_join_rollup"])
 def test_small_dim_joins_broadcast(spark, sf_dir, name):
-    plan = _plan(QUERIES[name](spark, sf_dir))
+    plan = physical_plan(QUERIES[name](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     # the fact side must not shuffle for a broadcast join
     assert "SortMergeJoin" not in plan, plan
@@ -84,7 +83,7 @@ def test_small_dim_joins_broadcast(spark, sf_dir, name):
      "j13_interval_overlap_join"],
 )
 def test_equi_joins_never_nested_loop(spark, sf_dir, name):
-    plan = _plan(QUERIES[name](spark, sf_dir))
+    plan = physical_plan(QUERIES[name](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -93,7 +92,7 @@ def test_brute_force_topk_broadcasts_query_side(spark, sf_dir):
     # ss1 is the documented-quadratic gold standard: the only sane
     # physical shape is broadcasting the handful of query vectors and
     # streaming the corpus once — never shuffling the corpus
-    plan = _plan(QUERIES["ss1_cosine_topk"](spark, sf_dir))
+    plan = physical_plan(QUERIES["ss1_cosine_topk"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -102,7 +101,7 @@ def test_aggregations_keep_partial_phase(spark, sf_dir):
     # map-side combine: the HashAggregate pair (partial + final) must
     # survive — losing it shuffles raw rows instead of partial states
     for name in ("a1_group_having", "dd1_exact_dedup", "s6_sql_source"):
-        plan = _plan(QUERIES[name](spark, sf_dir))
+        plan = physical_plan(QUERIES[name](spark, sf_dir))
         assert plan.count("HashAggregate") >= 2 or "partial" in plan, (name, plan)
 
 
@@ -113,14 +112,14 @@ def test_hot_path_stays_jvm_side(registry_plans):
     for name, plan in registry_plans.items():
         if name in PYTHON_OK:
             continue
-        hits = [n for n in PY_EVAL_NODES if n in plan]
+        hits = has_python_eval(plan)
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
 
 
 def test_flagship_dedup_plan_shape(spark, sf_dir):
-    plan = _plan(QUERIES["w1_dedup_keep_latest"](spark, sf_dir))
+    plan = physical_plan(QUERIES["w1_dedup_keep_latest"](spark, sf_dir))
     # one shuffle on the dedup keys; a second Exchange would mean the
     # window and the filter stopped sharing a partitioning
     assert plan.count("Exchange") <= 1, plan
@@ -137,7 +136,7 @@ def test_topk_ranks_map_side_first(spark, sf_dir, name):
     # top-10 per query (Partial WindowGroupLimit) BEFORE the shuffle,
     # so the exchange carries <= 10 x partitions rows per query, not
     # the whole scored corpus
-    plan = _plan(QUERIES[name](spark, sf_dir))
+    plan = physical_plan(QUERIES[name](spark, sf_dir))
     partials = [ln for ln in plan.splitlines()
                 if "WindowGroupLimit" in ln and "Partial" in ln]
     assert partials, plan
@@ -158,7 +157,7 @@ def test_connected_components_plan_stays_constant_depth(spark):
         [(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint"
     )
     labels = connected_components(pairs)
-    plan = _plan(labels)
+    plan = physical_plan(labels)
     # the final labeling (node list x star edges assembly join) is
     # eagerly checkpointed inside the operator, so consumers see ONE
     # flat materialized scan — the same contract as before the r13
@@ -192,7 +191,7 @@ def test_pl5_composition_keeps_stage_shapes(spark, sf_dir):
     docs = load_table(spark, "documents", sf_dir)
     keep = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
     survivors = docs.join(keep, "doc_id")
-    pairs_plan = _plan(lsh_candidate_pairs(lsh_bands(minhash_signatures(survivors))))
+    pairs_plan = physical_plan(lsh_candidate_pairs(lsh_bands(minhash_signatures(survivors))))
     assert "CartesianProduct" not in pairs_plan, pairs_plan
     assert "BroadcastNestedLoopJoin" not in pairs_plan, pairs_plan
     assert (
@@ -201,7 +200,7 @@ def test_pl5_composition_keeps_stage_shapes(spark, sf_dir):
         or "BroadcastHashJoin" in pairs_plan
     ), pairs_plan
 
-    final_plan = _plan(QUERIES["pl5_corpus_dedup_pipeline"](spark, sf_dir))
+    final_plan = physical_plan(QUERIES["pl5_corpus_dedup_pipeline"](spark, sf_dir))
     assert "CartesianProduct" not in final_plan, final_plan
     assert "BroadcastNestedLoopJoin" not in final_plan, final_plan
 
@@ -213,7 +212,7 @@ def test_token_budget_sample_avoids_global_sort_window(spark, sf_dir):
     feeds the 256-row bucket-totals window, broadcast back. A naive
     SUM OVER (ORDER BY hash) would funnel the whole corpus through
     one task — the regression this pins against."""
-    plan = _plan(QUERIES["p13_token_budget_sample"](spark, sf_dir))
+    plan = physical_plan(QUERIES["p13_token_budget_sample"](spark, sf_dir))
     assert "hashpartitioning(__b" in plan, plan
     assert "BroadcastExchange" in plan, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
@@ -222,7 +221,7 @@ def test_token_budget_sample_avoids_global_sort_window(spark, sf_dir):
 def test_watermark_max_prunes_to_needed_columns(spark, sf_dir):
     # MAX(ts) WHERE event_type = ...: exactly the ts + filter columns
     # may be read; value/user_id/event_id must be pruned
-    plan = _plan(QUERIES["a2_watermark_max"](spark, sf_dir))
+    plan = physical_plan(QUERIES["a2_watermark_max"](spark, sf_dir))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "ts" in read_schema and "event_type" in read_schema, read_schema
     for c in ("value", "user_id", "event_id"):
@@ -255,7 +254,7 @@ def test_shingle_rows_no_interpreted_lambda(spark, sf_dir):
     from dot_spark.sources.registry import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    plan = shingle_rows(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(shingle_rows(docs))
     assert "lambdafunction" not in plan, plan
     assert plan.count("regexp_replace") == 1, plan
 
@@ -269,7 +268,7 @@ def test_repetition_ratio_staged_no_recompute(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     out = repetition_ratio(docs).select("doc_id", "rep_2gram", "rep_3gram")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     assert plan.count("regexp_replace") == 1, plan.count("regexp_replace")
     assert plan.count("transform(") == 2, plan.count("transform(")
 
@@ -294,7 +293,7 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
 
     one_day = ev.select(F.max(F.to_date("ts"))).first()[0]
     df = wh.read("events_by_day").filter(F.col("event_date") == F.lit(one_day))
-    plan = _plan(df)
+    plan = physical_plan(df)
     # the date predicate must land in the PartitionFilters slot (planning-time
     # directory pruning), NOT in PushedFilters/post-scan Filter (data-time)
     assert "PartitionFilters: [isnotnull(event_date" in plan, plan
@@ -310,7 +309,7 @@ def test_topk_per_group_ranks_map_side_first(spark, sf_dir):
     before the shuffle (map-side top-k per segment) and the customer
     dim must broadcast — the fact side shuffles only the per-map
     survivors."""
-    plan = _plan(QUERIES["w8_topk_per_group"](spark, sf_dir))
+    plan = physical_plan(QUERIES["w8_topk_per_group"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     partials = [ln for ln in plan.splitlines()
                 if "WindowGroupLimit" in ln and "Partial" in ln]
@@ -321,7 +320,7 @@ def test_pivot_wide_is_single_aggregate_no_expand(spark, sf_dir):
     """a13 with PINNED pivot values must compile to one hash-aggregate
     pair (conditional partials) — no distinct-discovery job and no
     Expand fan-out."""
-    plan = _plan(QUERIES["a13_pivot_wide"](spark, sf_dir))
+    plan = physical_plan(QUERIES["a13_pivot_wide"](spark, sf_dir))
     assert plan.count("HashAggregate") >= 2, plan
     assert "Expand" not in plan, plan
     assert plan.count("Exchange") <= 1, plan
@@ -330,7 +329,7 @@ def test_pivot_wide_is_single_aggregate_no_expand(spark, sf_dir):
 def test_session_window_single_shuffle(spark, sf_dir):
     """st8: native session windows aggregate in one keyed exchange —
     no window-function pass, no second shuffle."""
-    plan = _plan(QUERIES["st8_session_window"](spark, sf_dir))
+    plan = physical_plan(QUERIES["st8_session_window"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Exchange") <= 1, plan
 
@@ -341,7 +340,7 @@ def test_gapfill_single_scan_no_join(spark, sf_dir):
     LOCF is inherited, not joined). The earlier grid-join form read
     the input twice — column pruning made the two aggregate subtrees
     differ, defeating exchange reuse; this pins the regression out."""
-    plan = _plan(QUERIES["a14_gapfill_locf"](spark, sf_dir))
+    plan = physical_plan(QUERIES["a14_gapfill_locf"](spark, sf_dir))
     assert plan.count("FileScan") == 1, plan
     assert "Join" not in plan, plan
     assert plan.count("Exchange") <= 2, plan
@@ -354,7 +353,7 @@ def test_weighted_sample_filter_reaches_scan(spark, sf_dir):
     # parquet scan for an InMemoryRelation and hide ReadSchema —
     # this test asserts the SCAN, so it must see the real one
     spark.catalog.clearCache()
-    plan = _plan(QUERIES["p14_weighted_sample"](spark, sf_dir))
+    plan = physical_plan(QUERIES["p14_weighted_sample"](spark, sf_dir))
     assert "Exchange" not in plan, plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" not in read_schema, read_schema
@@ -364,7 +363,7 @@ def test_corpus_shuffle_avoids_global_sort_window(spark, sf_dir):
     """p15 inherits p13's prefix-sum shape: row-level windows partition
     by hash bucket; only the 256-row totals pass through a single
     partition."""
-    plan = _plan(QUERIES["p15_corpus_shuffle"](spark, sf_dir))
+    plan = physical_plan(QUERIES["p15_corpus_shuffle"](spark, sf_dir))
     assert "hashpartitioning(__b" in plan, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
 
@@ -374,7 +373,7 @@ def test_global_topk_is_take_ordered_not_full_sort(spark, sf_dir):
     (bounded per-partition heaps) — a rangepartitioning exchange here
     means the whole table is being globally sorted for a 100-row
     answer."""
-    plan = _plan(QUERIES["a17_global_topk"](spark, sf_dir))
+    plan = physical_plan(QUERIES["a17_global_topk"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
     assert "rangepartitioning" not in plan, plan
 
@@ -388,13 +387,13 @@ def test_linkage_family_no_nested_loop(spark, sf_dir, name):
     joins: every join in them must stay an equi-join (block key,
     candidate ids, broadcast limits) — a nested-loop here means the
     blocking key was lost."""
-    plan = _plan(QUERIES[name](spark, sf_dir))
+    plan = physical_plan(QUERIES[name](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_winsorize_broadcasts_limits_table(spark, sf_dir):
-    plan = _plan(QUERIES["a18_winsorize"](spark, sf_dir))
+    plan = physical_plan(QUERIES["a18_winsorize"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -419,6 +418,28 @@ def test_bpe_round_plans_stay_constant_depth(spark):
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
 
 
+def test_plan_counts_refuses_a_read_after_the_action(spark):
+    """Once the frame has run an action, AQE prints its final and its
+    initial plan together, and a scalar subquery's nested adaptive
+    plan appears in both: a read after collect() counts 6 exchanges
+    where the plan has 2. The read before the action gives the
+    frame's counts; the read after it raises. final_plan is the
+    reverse: it reads AQE's final plan after the action only."""
+    df = spark.sql(
+        "SELECT id % 7 AS k, count(*) AS n FROM range(100) "
+        "WHERE id > (SELECT max(id) - 50 FROM range(60)) GROUP BY id % 7"
+    )
+    assert plan_counts(df) == {
+        "exchanges": 2, "scans": 0, "py_eval": 0, "nested_loop": 0
+    }
+    with pytest.raises(ValueError, match="no final plan yet"):
+        final_plan(df)
+    assert len(df.collect()) == 7
+    with pytest.raises(ValueError, match="before the action"):
+        plan_counts(df)
+    assert "== Final Plan ==" in final_plan(df)
+
+
 def test_plan_shapes_match_committed_baseline(registry_plans):
     """Global plan-regression net: every query's shuffle / scan /
     Python-eval / nested-loop node counts must not EXCEED the
@@ -431,7 +452,6 @@ def test_plan_shapes_match_committed_baseline(registry_plans):
     import json
     import os
 
-    from tools.plan_baseline import plan_counts_str
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -472,7 +492,7 @@ def test_plan_shapes_match_aqe_off_baseline(spark):
     import os
 
     from bench import HEADLINE
-    from tools.plan_baseline import SF_DIR, plan_counts
+    from tools.plan_baseline import SF_DIR
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -530,7 +550,7 @@ def test_dynamic_partition_pruning_on_warehouse_join(spark, sf_dir, tmp_path):
         .filter(F.col("bucket") == 1)
     )
     j = fact.join(dim, "event_date")
-    plan = _plan(j)
+    plan = physical_plan(j)
     assert "dynamicpruning" in plan.lower(), plan
     # and the join result is right: only rows whose date survives the
     # dim filter
@@ -595,7 +615,7 @@ def test_pack_sequences_avoids_global_sort_window(spark, sf_dir):
     """p19 must reuse the p13 distributed prefix-sum shape: row-level
     window partitioned by the 256 hash buckets, SinglePartition
     exchange only for the bucket-totals window."""
-    plan = _plan(QUERIES["p19_sequence_packing"](spark, sf_dir))
+    plan = physical_plan(QUERIES["p19_sequence_packing"](spark, sf_dir))
     assert "hashpartitioning(__b" in plan, plan
     assert "BroadcastExchange" in plan, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
@@ -607,7 +627,7 @@ def test_j19_bloom_filters_before_the_shuffle(spark, sf_dir):
     map-side, before rows enter the wire), and the exact join stays
     the pinned sort-merge — no broadcast rescue, because the query
     models the dim side being broadcast-infeasible."""
-    plan = _plan(QUERIES["j19_bloom_prejoin"](spark, sf_dir))
+    plan = physical_plan(QUERIES["j19_bloom_prejoin"](spark, sf_dir))
     lines = plan.splitlines()
     filt = next(i for i, l in enumerate(lines) if "bit_get" in l)
     exch = next(
@@ -624,7 +644,7 @@ def test_p20_zorder_rank_avoids_global_sort_window(spark, sf_dir):
     """p20's distributed z-rank must keep the prefix-sum shape: the
     row-level row_number window partitioned by the 256 z-buckets,
     SinglePartition reserved for the bucket totals."""
-    plan = _plan(QUERIES["p20_zorder_layout"](spark, sf_dir))
+    plan = physical_plan(QUERIES["p20_zorder_layout"](spark, sf_dir))
     assert "hashpartitioning(__b" in plan, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
 
@@ -649,7 +669,6 @@ def test_t15_unigram_lm_unmaterialized_twin(spark, sf_dir):
     corpus tokenizes exactly TWICE (freq build + probe side) plus the
     doc_id scan under the final agg; the freq table broadcasts."""
     from dot_spark.queries import t15_unigram_lm_score
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = t15_unigram_lm_score(spark, sf_dir)
@@ -670,7 +689,6 @@ def test_t23_bigram_lm_unmaterialized_twin(spark, sf_dir):
     unigram table broadcasts (|V| below the gate), no nested loop
     (|V| is a collected scalar, not a crossJoin)."""
     from dot_spark.queries import t23_bigram_lm_score
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = t23_bigram_lm_score(spark, sf_dir)
@@ -691,7 +709,6 @@ def test_t26_dsir_unmaterialized_twin(spark, sf_dir):
     totals broadcast is the only nested-loop site."""
     from dot_spark.operators.text import dsir_importance
     from dot_spark.queries import load_table
-    from tools.plan_baseline import plan_counts
 
     docs = load_table(spark, "documents", sf_dir)
     flag = F.col("lang") == "en"
@@ -715,7 +732,6 @@ def test_dd5b_hot_cap_unmaterialized_twin(spark, sf_dir):
     becomes a nested loop."""
     from dot_spark.operators.textdedup import bucketed_neardup_pairs
     from dot_spark.queries import load_table
-    from tools.plan_baseline import plan_counts
 
     emb = load_table(spark, "embeddings", sf_dir)
     with unmaterialized():
@@ -747,7 +763,6 @@ def test_cc_round_unmaterialized_twin(spark):
         _cc_star_round,
         connected_components,
     )
-    from tools.plan_baseline import plan_counts
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
@@ -803,7 +818,6 @@ def test_pagerank_round_unmaterialized_twin(spark):
     scan, no Python, no nested loop — and assembling one manual
     round equals pagerank(iterations=1) row-for-row."""
     from dot_spark.operators.graph import _pagerank_round, pagerank
-    from tools.plan_baseline import plan_counts
 
     edges_in = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
@@ -827,7 +841,7 @@ def test_pagerank_round_unmaterialized_twin(spark):
             "node", "rank"
         )
         counts = plan_counts(twin)
-        plan = _plan(twin)
+        plan = physical_plan(twin)
         # the CONTRIBUTION join (edges x ranks) must be broadcast in
         # the small regime — losing the hint re-shuffles the edges
         # every round. The rank-UPDATE join (nodes x contrib, two
@@ -857,7 +871,6 @@ def test_t27_kneser_ney_unmaterialized_twin(spark, sf_dir):
     three stat tables broadcast (no nested loop — N1+(..) is a
     collected scalar, not a crossJoin), zero Python."""
     from dot_spark.queries import t27_kneser_ney_score
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = t27_kneser_ney_score(spark, sf_dir)
@@ -876,8 +889,6 @@ def test_t28_gopher_rules_zero_shuffle(spark, sf_dir):
     (the t25 discipline): any shuffle or Python boundary here is a
     regression — the whole point of a heuristic pre-filter is that
     it rides the ingest scan for free at 100 TB."""
-    from tools.plan_baseline import plan_counts
-
     counts = plan_counts(QUERIES["t28_gopher_rules"](spark, sf_dir))
     assert counts == {
         "exchanges": 0,

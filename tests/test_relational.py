@@ -11,6 +11,7 @@ from dot_spark.operators.relational import (
     union_distinct,
     watermark_max,
 )
+from dot_spark.plans import physical_plan
 
 
 def test_anti_join_excludes(spark):
@@ -22,7 +23,7 @@ def test_anti_join_excludes(spark):
 def test_anti_join_is_broadcast(spark):
     ids = spark.createDataFrame([("a",)], "id string")
     excl = spark.createDataFrame([("b",)], "id string")
-    plan = anti_join(ids, excl, "id")._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(anti_join(ids, excl, "id"))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
@@ -84,7 +85,7 @@ def test_asof_join_is_single_shuffle(spark):
 
     left = spark.createDataFrame([(1, 10, "x")], "k INT, ts INT, id STRING")
     right = spark.createDataFrame([(1, 5, 1.0)], "k INT, ts INT, v DOUBLE")
-    plan = asof_join(left, right, on="k")._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(asof_join(left, right, on="k"))
     # union + window carry: exactly one hash exchange on the key, no
     # join node at all (the range-join explosion never exists)
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -123,7 +124,7 @@ def test_range_join_is_hash_join_not_nested_loop(spark):
 
     pts = spark.createDataFrame([(1, 5.0)], "pid INT, x DOUBLE")
     iv = spark.createDataFrame([(1, 0.0, 10.0)], "iid INT, lo DOUBLE, hi DOUBLE")
-    plan = range_join(pts, iv, "x", "lo", "hi", 4.0)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(range_join(pts, iv, "x", "lo", "hi", 4.0))
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan, plan
 

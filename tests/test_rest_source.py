@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from dot_spark.plans import physical_plan
 from dot_spark.sources.rest import register_paged_json
 
 SCHEMA = "id BIGINT, status STRING, modified BIGINT, group_id STRING"
@@ -75,7 +76,7 @@ def test_server_side_pushdown_filters_at_source(spark, api_dir):
     assert got == [2, 4]
     # both predicates are on declared-filterable columns => pushed;
     # the scan node must NOT be followed by a Spark Filter on them
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "DEPROVISIONED" not in plan.split("BatchScan")[0], plan
 
 
@@ -83,7 +84,7 @@ def test_unsupported_filter_stays_in_spark(spark, api_dir):
     # id is not server-filterable: Spark must keep evaluating it
     df = _read(spark, api_dir).filter(F.col("id") > 1)
     assert sorted(r.id for r in df.collect()) == [2, 3, 4, 10, 11, 12]
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "Filter" in plan, plan
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from dot_spark.loads import Warehouse
 from dot_spark.operators.relational import salted_join
+from dot_spark.plans import final_plan, physical_plan
 from dot_spark.sources.registry import load_table
 
 
@@ -81,7 +82,7 @@ def test_bucketed_join_is_shuffle_free(wh, spark, sf_dir):
     ob, lb = wh.read_bucketed("orders_b"), wh.read_bucketed("lineitem_b")
     # force a non-broadcast join so the bucketing is what saves the shuffle
     joined = ob.hint("merge").join(lb, "o_orderkey")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(joined)
     assert "Exchange" not in plan, plan
 
     plain = o.join(li, "o_orderkey")
@@ -94,7 +95,7 @@ def test_bucketed_groupby_is_shuffle_free(wh, spark, sf_dir):
     )
     wh.write_bucketed(li, "li_bg", ["l_orderkey"], num_buckets=8)
     agg = wh.read_bucketed("li_bg").groupBy("l_orderkey").agg(F.sum("l_quantity"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(agg)
     assert "Exchange" not in plan, plan
 
 
@@ -205,7 +206,7 @@ def test_aqe_skew_split_engages_on_unsalted_hot_join(spark):
         # execute THIS dataframe's plan (count() would wrap it in a
         # new Dataset and leave joined's AQE plan un-finalized)
         n_plain = len(joined.collect())
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = final_plan(joined)
         assert "skew=true" in plan, plan[:4000]
         # semantics: unsalted+AQE == salted, row for row
         n_salted = salted_join(fact, dim, "k").count()

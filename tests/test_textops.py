@@ -22,6 +22,7 @@ from dot_spark.operators.textdedup import (
     simhash,
     simhash_signature,
 )
+from dot_spark.plans import physical_plan, plan_counts
 from dot_spark.sources.registry import load_table
 from tests.conftest import unmaterialized
 
@@ -431,10 +432,9 @@ def test_contamination_broadcasts_bench_side(spark, sf_dir):
     from dot_spark.sources.registry import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    plan = (
+    plan = physical_plan(
         contamination_flags(docs.filter("doc_id % 97 <> 0"),
                             docs.filter("doc_id % 97 = 0"), n=4)
-        ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan
 
@@ -510,7 +510,7 @@ def test_sessionize_single_shuffle(spark):
     df = spark.createDataFrame(
         [(1, 1, dt.datetime(2026, 5, 1))], "user_id BIGINT, event_id BIGINT, ts TIMESTAMP"
     )
-    plan = sessionize(df)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(sessionize(df))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
 
 
@@ -929,7 +929,7 @@ def test_hashed_linear_quality_zero_shuffle_and_fold(spark, docs):
     from dot_spark.operators.text import hashed_linear_quality
 
     out = hashed_linear_quality(docs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     assert "Exchange" not in plan, plan
     rows = {r["doc_id"]: r for r in out.collect()}
     sample = docs.select("doc_id", "text").limit(20).collect()
@@ -992,7 +992,7 @@ def test_weighted_topk_sample_laws(spark, docs):
 
     w = F.least(F.col("n_chars"), F.lit(2000)) / 2000.0
     out = weighted_topk_sample(docs, "doc_id", w, k=50)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     assert "TakeOrderedAndProject" in plan, plan
     got = [r["doc_id"] for r in out.select("doc_id").collect()]
     assert len(got) == 50 and len(set(got)) == 50
@@ -1037,7 +1037,6 @@ def test_perplexity_prune_unmaterialized_plan_pin(spark, docs):
     lost broadcast(freq) or an extra corpus scan grows these counts
     even though the production plan hides them."""
     from dot_spark.operators.text import perplexity_prune
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = perplexity_prune(docs)
@@ -1075,7 +1074,6 @@ def test_pmi_collocations_unmaterialized_plan_pin(spark, docs):
     corpus scan under the unigram aggregate, a lost broadcast —
     still fails loudly (the t24 pattern)."""
     from dot_spark.operators.text import pmi_collocations
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = pmi_collocations(docs)
@@ -1099,7 +1097,6 @@ def test_ngram_jaccard_unmaterialized_plan_pin(spark, docs):
     slice-explode, a per-branch re-tokenization, a Python boundary —
     grows these counts and fails loudly."""
     from dot_spark.operators.textdedup import ngram_jaccard_pairs
-    from tools.plan_baseline import plan_counts
 
     with unmaterialized():
         twin = ngram_jaccard_pairs(docs, shingle_maxdf=50)
@@ -1120,7 +1117,6 @@ def test_containment_unmaterialized_plan_pin(spark, docs):
     re-tokenization, a lost exchange reuse or a Python boundary in
     the hidden subtree grows these counts and fails loudly."""
     from dot_spark.operators.textdedup import containment_pairs
-    from tools.plan_baseline import plan_counts
 
     kw = dict(n=3, threshold=0.5, shingle_maxdf=40)
     with unmaterialized():

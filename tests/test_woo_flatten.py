@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from dot_spark.operators.woo_flatten import flatten_order_items, flatten_orders
+from dot_spark.plans import physical_plan
 
 ITEM = "id BIGINT, sku STRING, bundled_by STRING, name STRING, price STRING, quantity BIGINT, total_tax STRING, product_id BIGINT, cru_data STRUCT<donor_premium STRING>, meta_data ARRAY<STRUCT<key STRING, value STRING>>"
 RAW_DDL = (
@@ -105,7 +106,7 @@ def test_item_flags_and_meta_cost(raw):
 
 
 def test_flatten_stays_codegen_single_window_shuffle(raw):
-    plan = flatten_order_items(raw)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(flatten_order_items(raw))
     for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert bad not in plan
     # the sticky carry's window is the only exchange

@@ -9,6 +9,7 @@ import zipfile
 import pytest
 from pyspark.sql import functions as F
 
+from dot_spark.plans import physical_plan
 from dot_spark.sources.files import read_zip_csv, read_zip_members
 
 GEO_SCHEMA = {
@@ -77,7 +78,7 @@ def test_extraction_stays_distributed(spark, geo_zip):
         spark, geo_zip, GEO_SCHEMA,
         member_regex=r"allCountries\.txt$", skip_rows=1,
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert plan.count("MapInPandas") == 1, plan
     # generate/posexplode + projection after the Python stage
     assert "Generate" in plan, plan

@@ -2,12 +2,12 @@
 
 For every registered query, records the node counts that define its
 scale shape — Exchange (shuffles), FileScan (input passes), Python
-eval boundaries, and nested-loop joins — into
-tools/plan_baseline.json. tests/test_plans.py compares live plans
-against this file and fails any query whose shuffle/scan/py-eval
-count GREW: the silent regression class (a lost broadcast, a
-defeated exchange reuse, an accidental UDF) that small-SF
-correctness tests cannot see.
+eval boundaries, and nested-loop joins, as counted by
+dot_spark.plans.plan_counts — into tools/plan_baseline.json.
+tests/test_plans.py compares live plans against this file and fails
+any query whose shuffle/scan/py-eval count GREW: the silent
+regression class (a lost broadcast, a defeated exchange reuse, an
+accidental UDF) that small-SF correctness tests cannot see.
 
 Run after intentionally changing a plan shape:
     python tools/plan_baseline.py
@@ -24,33 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
-PY_EVAL_NODES = (
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "FlatMapGroupsInPandas",
-    "MapInPandas",
-    "PythonMapInArrow",
-)
-
-
-def plan_counts_str(plan: str) -> dict:
-    """Node counts from an executed-plan string (the test suite's
-    shared registry_plans fixture feeds strings directly)."""
-    return {
-        "exchanges": plan.count("Exchange"),
-        "scans": plan.count("FileScan"),
-        "py_eval": sum(plan.count(n) for n in PY_EVAL_NODES),
-        "nested_loop": plan.count("BroadcastNestedLoopJoin")
-        + plan.count("CartesianProduct"),
-    }
-
-
-def plan_counts(df) -> dict:
-    return plan_counts_str(df._jdf.queryExecution().executedPlan().toString())
-
 
 def main() -> None:
     from dot_spark import get_spark
+    from dot_spark.plans import plan_counts
     from dot_spark.queries import QUERIES
 
     spark = get_spark("plan_baseline")

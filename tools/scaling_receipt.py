@@ -19,8 +19,8 @@ larger input:
 2. For each core count (N, max(1, N // 4)), N = the CPUs this
    process may run on, run the named queries in a FRESH subprocess
    (cold JVM, exactly the bench contract's local[$SPARK_GRAFT_CPUS])
-   via tools/solo_time.py, min-of-N.
-3. Emit tools/ab_receipts/r15_scaling.json with per-query seconds
+   via `bench.py`, per-query min over N rounds.
+3. Print the result JSON as the last stdout line: per-query seconds
    and the low/high-core ratio (ratio >> 1 = the query actually
    parallelizes at this scale).
 
@@ -119,7 +119,10 @@ def main() -> None:
     names = names or DEFAULT_QUERIES
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    up_dir = tempfile.mkdtemp(prefix=f"sfup_k{k}_")
+    tmp_root = tempfile.mkdtemp(prefix=f"sfup_k{k}_")
+    # bench.py reads its "sf" field off the directory name, so the
+    # upsample dir is named like the source dir (K is in the result)
+    up_dir = os.path.join(tmp_root, os.path.basename(SRC_SF_DIR.rstrip("/")))
     print(f"materializing K={k} upsample of {SRC_SF_DIR} -> {up_dir}")
     materialize(k, up_dir)
 
@@ -138,38 +141,38 @@ def main() -> None:
                 os.environ,
                 SPARK_GRAFT_CPUS=str(cpus),
                 SPARK_GRAFT_SF_DIR=up_dir,
+                DOT_SPARK_BENCH_ROUNDS=str(n),
             )
             out = subprocess.run(
-                [sys.executable, os.path.join(here, "tools", "solo_time.py"),
-                 "-n", str(n), *names],
+                [sys.executable, os.path.join(here, "bench.py"), *names],
                 capture_output=True, text=True, env=env, timeout=3600,
             )
             if out.returncode != 0:
                 raise RuntimeError(
-                    f"solo_time.py at cpus={cpus} exited {out.returncode}:\n"
+                    f"bench.py at cpus={cpus} exited {out.returncode}:\n"
                     f"{out.stderr[-2000:]}"
                 )
             line = out.stdout.strip().splitlines()[-1]
-            result["per_cpus"][str(cpus)] = json.loads(line)
+            secs = json.loads(line)["queries"]
+            for q, sec in secs.items():
+                if not isinstance(sec, float):
+                    raise RuntimeError(f"{q} at cpus={cpus}: {sec['err']}")
+            result["per_cpus"][str(cpus)] = secs
             print(f"cpus={cpus}: {line}")
         ratios = {}
         for q in names:
-            t_hi = result["per_cpus"][str(hi)][q]["min"]
-            t_lo = result["per_cpus"][str(lo)][q]["min"]
+            t_hi = result["per_cpus"][str(hi)][q]
+            t_lo = result["per_cpus"][str(lo)][q]
             ratios[q] = round(t_lo / t_hi, 3) if t_hi else None
         result["ratio_low_over_high"] = ratios
     finally:
         if not keep:
-            shutil.rmtree(up_dir, ignore_errors=True)
+            shutil.rmtree(tmp_root, ignore_errors=True)
             result["upsample_dir"] = "deleted after run"
         else:
             result["upsample_dir"] = up_dir
 
-    path = os.path.join(here, "tools", "ab_receipts", "r15_scaling.json")
-    with open(path, "w") as f:
-        json.dump(result, f, indent=2)
-    print(f"wrote {path}")
-    print(json.dumps(result.get("ratio_low_over_high", {}), indent=2))
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":
