@@ -80,9 +80,7 @@ HEADLINE = [
     "a14_gapfill_locf",
     "p15_corpus_shuffle",
     # round-7 continuation: the chain-join top-k, cohort retention,
-    # and the mixture resampler (graph family g1/g2 is tracked by
-    # tools/scale_sanity.py instead — their iterative/wedge cost is a
-    # scaling-curve question, not a suite-latency one)
+    # and the mixture resampler
     "j17_multihop_topk",
     "a22_cohort_retention",
     "p18_mixture_resample",
@@ -132,9 +130,8 @@ HEADLINE = [
     # headline row. r13 cut it from ~31 s to ~7 s at sf0.1 (the
     # quality-gate pushdown barrier + the star-contraction closure),
     # but 7 s would still be ~25% of the suite total and dominate
-    # round-over-round comparability the way dd8 would. It has its
-    # OWN scale cell now (tools/scale_sanity.py: alpha 0.2 across
-    # K=1..10, closure rounds 4-5 flat); correctness rides the gate.
+    # round-over-round comparability the way dd8 would; its scaling
+    # curve is `tools/scaling_receipt.py pl17_soft_corpus_build`.
 ]
 
 # Queries whose BUILDER executes the heavy work EAGERLY (iterative

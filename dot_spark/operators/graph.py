@@ -62,9 +62,8 @@ def copurchase_edges(
     everything carries no pairing signal and only its quadratic cost.
     The basket-size filter runs before the self-join, so the
     quadratic stage never sees the hub key at all; the join itself is
-    a plain equi-join AQE can skew-split (receipt: the
-    j6_unsalted_hot_join grid cell in tools/scale_sanity.py and the
-    plan-pinned skew=true engagement test in tests/test_scale.py).
+    a plain equi-join AQE can skew-split (receipt: the plan-pinned
+    skew=true engagement test in tests/test_scale.py).
     """
     # ONE exchange for the whole (distinct -> per-key ops) prefix
     # (r14 optimization round, guide §2.4 "two operations keyed the

@@ -123,7 +123,7 @@ def ranked_by(
     # inner join on the DERIVED key pushes an isnotnull(__b) filter
     # below the projection, where Catalyst substitutes the whole
     # Morton/quantize chain into the filter — measured 5x wall on the
-    # probe side (scale_sanity alpha 1.48 -> 0.18 from this one-word
+    # probe side (scaling alpha 1.48 -> 0.18 from this one-word
     # change). A left join generates no probe-side key filter, so the
     # scan stays one clean codegen pass. Same 256-bucket prefix shape
     # as sampling.token_budget_sample / sampling.pack_sequences and

@@ -336,8 +336,7 @@ def ngram_jaccard_pairs(
     # hot shingle keys (measured 5x slower); the broadcast-hash plan
     # streams the probe side in scan order, spreading a hot bucket's
     # m^2 expansion evenly over tasks. AQE's skew-split engagement is
-    # receipts-backed: tools/scale_sanity.py j6_unsalted_hot_join +
-    # the plan-pinned skew=true test in tests/test_scale.py.
+    # pinned by the skew=true plan test in tests/test_scale.py.
     sh, sizes = _distinct_shingle_hashes(df, id_col, text_col, n)
     freq = sh.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df_sh"))
     keep = F.col("df_sh") >= 2
@@ -779,8 +778,8 @@ def dedup_corpus(
     canonical doc per near-dup cluster plus everything unclustered.
     ONE definition shared by the batch queries (pl5, and pl6 via
     ``pairs_fn``), the streaming compaction pass
-    (pipelines.canonical_corpus), the scale sweep, and the parity
-    test, so none of them can drift.
+    (pipelines.canonical_corpus) and the parity test, so none of
+    them can drift.
 
     ``pairs_fn(survivors) -> (id_a, id_b, ...)`` swaps the pair
     miner; the default is raw MinHash+LSH candidates (pl5). Pass
@@ -1034,7 +1033,7 @@ def connected_components(
     # asymmetric set can at most add one extra no-op round before
     # the fixpoint re-probes equal — the round is a deterministic
     # function of the symmetrized input. Round counts measured
-    # identical on the scale grid; outputs are oracle/law-pinned.)
+    # identical on upsampled corpora; outputs are oracle/law-pinned.)
     def probe(df):
         return df.agg(
             F.count("*"),
@@ -1081,9 +1080,8 @@ def connected_components(
             f"connected_components did not converge in {max_iterations} iterations"
         )
     if stats is not None:
-        # observability hand-back for harnesses (tools/
-        # scale_sanity.py pins round counts across upsampled scales);
-        # never read by query logic.
+        # observability hand-back for tests (round counts); never
+        # read by query logic.
         stats["rounds"] = rounds
     # the converged star edges are stored asymmetric; the complete
     # labeling reads both orientations (identical to the r13
@@ -1165,7 +1163,6 @@ def soft_dedup_weights(
     rows_per_band: int = 4,
     shingle_n: int = 3,
     carry: tuple[str, ...] = (),
-    cc_stats: dict | None = None,
 ) -> DataFrame:
     """SOFT deduplication — reweight near-duplicate clusters instead
     of dropping them (the D4 / SoftDeDup family, Tirumala et al.
@@ -1178,12 +1175,9 @@ def soft_dedup_weights(
     scale shapes), then ONE window count over the cluster_id
     partitioning (no join-back); singleton docs never enter the
     closure and cluster as themselves via the left join + coalesce.
-    Shared by the dd18 query AND tools/scale_sanity.py's grid cell,
-    so the measured cell can never drift from the shipped query.
     ``carry`` names extra doc columns to ride through the window
     (pl17 carries source/n_toks so the composed build keeps the
-    single-exchange shape — no doc_id join-back). ``cc_stats`` hands
-    back the closure round count (see connected_components).
+    single-exchange shape — no doc_id join-back).
 
     Returns (doc_id, *carry, cluster_id, cluster_size, keep_weight).
     """
@@ -1192,7 +1186,7 @@ def soft_dedup_weights(
         lsh_bands(sig, bands=bands, rows_per_band=rows_per_band),
         id_col=id_col,
     )
-    cc = connected_components(pairs, stats=cc_stats)
+    cc = connected_components(pairs)
     labeled = (
         docs.select(id_col, *carry)
         .join(cc, docs[id_col] == cc["node"], "left")

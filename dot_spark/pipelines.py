@@ -142,12 +142,9 @@ def route_events_batch(events: DataFrame) -> dict[str, DataFrame]:
     main.py:298-319): gate on completion, route on status, return
     the per-topic DataFrames (retry / completed) plus the ignored
     remainder — the P4/P5 pipeline the streaming fan-out mirrors."""
-    from dot_spark.routing import route_status
+    from dot_spark.streaming.fanout import route_events
 
-    code = F.when(F.col("event_type") == "error", 20).when(
-        F.col("event_type") == "purchase", 10
-    )
-    routed = events.withColumn("route", route_status(code))
+    routed = route_events(events)
     return {
         "retry": routed.filter(F.col("route") == "retry"),
         "completed": routed.filter(F.col("route") == "completed"),
@@ -541,9 +538,7 @@ def streaming_mv_maintain(
     )
 
 
-def soft_corpus_build(
-    docs: DataFrame, cc_stats: dict | None = None
-) -> DataFrame:
+def soft_corpus_build(docs: DataFrame) -> DataFrame:
     """End-to-end SOFT corpus build — quality gate (t25 hashed linear
     classifier, kept = score > 0) -> soft dedup over the SURVIVORS
     (dd18: MinHash+LSH pairs, component closure, keep_weight =
@@ -553,10 +548,7 @@ def soft_corpus_build(
     Engine-parity discipline: the token mass is EXACT DECIMAL
     arithmetic (bigint tokens x 6-dp weights — sums are exact, so
     summation order cannot drift), and the mixture rate divides the
-    identical doubles before a correctly-rounded sqrt. Shared by the
-    pl17 query AND tools/scale_sanity.py's grid cell so the measured
-    cell can never drift from the shipped query; ``cc_stats`` hands
-    back the closure round count.
+    identical doubles before a correctly-rounded sqrt.
 
     Returns (source, n_docs_kept, weighted_tokens, keep_rate).
     """
@@ -583,9 +575,7 @@ def soft_corpus_build(
     survivors = docs.join(surv_ids, "doc_id").withColumn(
         "n_toks", F.size(F.split(normalize_text(F.col("text")), " "))
     )
-    weighted = soft_dedup_weights(
-        survivors, carry=("source", "n_toks"), cc_stats=cc_stats
-    )
+    weighted = soft_dedup_weights(survivors, carry=("source", "n_toks"))
     mass_rows = weighted.select(
         "source",
         (

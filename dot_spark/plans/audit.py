@@ -27,10 +27,32 @@ JOIN_NODES = (
 
 # how AQE's root node prints once the frame's own action has run
 _FINAL_ROOT = "AdaptiveSparkPlan isFinalPlan=true"
+# how a nested adaptive plan (a materialized cache) prints its
+# initial copy, below its final one
+_INITIAL_HEADER = "+- == Initial Plan =="
 
 
 def _executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _drop_nested_initial_plans(plan: str) -> str:
+    """The plan without any nested `== Initial Plan ==` subtree. A
+    materialized cache (InMemoryRelation) prints its stored adaptive
+    plan twice, final and initial, so each node inside it would count
+    twice; the final copy is the one that ran."""
+    out: list[str] = []
+    skip = None  # tree prefix of the subtree being dropped
+    for line in plan.splitlines():
+        if skip is not None and line.startswith(skip):
+            continue
+        skip = None
+        at = line.find(_INITIAL_HEADER)
+        if at >= 0:
+            skip = line[:at] + "   "
+            continue
+        out.append(line)
+    return "\n".join(out)
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -42,14 +64,14 @@ def physical_plan(df: DataFrame) -> str:
     raises instead of returning inflated counts. Only the root is
     checked: a materialized cache under a fresh frame prints its own
     stored plan as final, and that is not a read after this frame's
-    action."""
+    action; the cache's initial-plan copy is dropped."""
     plan = _executed_plan(df)
     if plan.startswith(_FINAL_ROOT):
         raise ValueError(
             "physical plan read after the frame ran an action "
             "(isFinalPlan=true); read the plan before the action"
         )
-    return plan
+    return _drop_nested_initial_plans(plan)
 
 
 def final_plan(df: DataFrame) -> str:

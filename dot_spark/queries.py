@@ -2930,9 +2930,7 @@ def dd18_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton docs never enter the closure and cluster as themselves
     via the left join + coalesce. Weight rounds to 6 dp (exact
     1/int — both engines produce identical doubles). Body lives in
-    operators/textdedup.py::soft_dedup_weights, shared with the
-    tools/scale_sanity.py grid cell so the measured cell can never
-    drift from the shipped query."""
+    operators/textdedup.py::soft_dedup_weights."""
     from dot_spark.operators.textdedup import soft_dedup_weights
 
     docs = load_table(spark, "documents", sf_dir)
@@ -4031,13 +4029,10 @@ def c2_webhook_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Webhook status routing (dbt-webhook/main.py:307-319) mapped
     onto events: error -> retry topic, purchase -> completed topic,
     everything else ignored."""
-    from dot_spark.routing import route_status
+    from dot_spark.streaming.fanout import route_events
 
     ev = load_table(spark, "events", sf_dir)
-    code = F.when(F.col("event_type") == "error", 20).when(
-        F.col("event_type") == "purchase", 10
-    )
-    return ev.select("event_id", route_status(code).alias("route"))
+    return route_events(ev).select("event_id", "route")
 
 
 # ---------------------------------------------------------------------------
@@ -4603,20 +4598,14 @@ def pl3_event_retry_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only the pre-filtered retry branch; everything upstream
     is the same conditional-agg classifier plan as c1.
     """
-    from dot_spark.routing import route_status
+    from dot_spark.streaming.fanout import route_events
 
     verdicts = c1_classify_runs(spark, sf_dir).select(
         "run_id", "reason", "is_retryable", "prior_is_retry"
     )
     ev = load_table(spark, "events", sf_dir)
-    routed = ev.select(
-        "event_id",
-        F.col("user_id").alias("run_id"),
-        route_status(
-            F.when(F.col("event_type") == "error", 20).when(
-                F.col("event_type") == "purchase", 10
-            )
-        ).alias("route"),
+    routed = route_events(ev).select(
+        "event_id", F.col("user_id").alias("run_id"), "route"
     )
     do_retry = F.col("is_retryable") & ~F.col("prior_is_retry")
     return (
@@ -9828,9 +9817,7 @@ def pl17_soft_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     components' own: zero-shuffle scoring, band-bucket equi-join,
     pointer-jumping closure, one window count (source/n_toks CARRIED
     through it — no doc_id join-back), one |sources|-row aggregate.
-    Body lives in pipelines.py::soft_corpus_build, shared with the
-    tools/scale_sanity.py grid cell so the measured cell can never
-    drift from the shipped query."""
+    Body lives in pipelines.py::soft_corpus_build."""
     from dot_spark.pipelines import soft_corpus_build
 
     docs = load_table(spark, "documents", sf_dir)

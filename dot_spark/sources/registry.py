@@ -126,9 +126,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
     """All registry tables as a dict of lazy DataFrames."""
     return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dot_spark.plans import (
+    count_exchanges,
     final_plan,
     has_python_eval,
     physical_plan,
@@ -438,6 +439,23 @@ def test_plan_counts_refuses_a_read_after_the_action(spark):
     with pytest.raises(ValueError, match="before the action"):
         plan_counts(df)
     assert "== Final Plan ==" in final_plan(df)
+
+
+def test_plan_counts_read_a_materialized_cache_once(spark):
+    """A fresh frame over a persisted, materialized cache: the
+    InMemoryRelation prints its stored adaptive plan as final and
+    initial, and only the final copy counts. The plan has one
+    exchange, the cache's repartition."""
+    cached = (
+        spark.range(1000).withColumn("k", F.col("id") % 7).repartition(4, "k").persist()
+    )
+    try:
+        cached.count()
+        agg = cached.groupBy("k").count()
+        assert plan_counts(agg)["exchanges"] == 1
+        assert count_exchanges(physical_plan(agg)) == 1
+    finally:
+        cached.unpersist()
 
 
 def test_plan_shapes_match_committed_baseline(registry_plans):

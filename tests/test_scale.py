@@ -1,4 +1,5 @@
-"""Scale-technique tests: skew salting and bucketed co-located joins.
+"""Scale-technique tests: skew salting and bucketed co-located joins,
+plus the K-times upsampler behind tools/scaling_receipt.py.
 
 These verify the two load-time/plan-time levers the 100 TB design
 leans on beyond what Catalyst does automatically: salting spreads a
@@ -8,6 +9,8 @@ write time.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +18,8 @@ from dot_spark.loads import Warehouse
 from dot_spark.operators.relational import salted_join
 from dot_spark.plans import final_plan, physical_plan
 from dot_spark.sources.registry import load_table
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -217,3 +222,44 @@ def test_aqe_skew_split_engages_on_unsalted_hot_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_upsample_copies_every_table_k_fold_with_joins_intact(spark, sf_dir, tmp_path):
+    """K=2 upsample: every table keeps its schema, K-copied tables
+    double and region/nation do not, doc ids stay unique, lineitem
+    keeps referential integrity to orders, and a join across tables
+    (j5) returns exactly twice its source rows."""
+    from dot_spark.queries import QUERIES
+    from dot_spark.sources.registry import TABLES
+    from tools.scaling_receipt import SHARED_TABLES, upsample
+
+    out = str(tmp_path / "sf_up")
+    upsample(spark, sf_dir, 2, out)
+    for t in TABLES:
+        src, up = load_table(spark, t, sf_dir), load_table(spark, t, out)
+        assert up.schema == src.schema, t
+        assert up.count() == (1 if t in SHARED_TABLES else 2) * src.count(), t
+    docs = load_table(spark, "documents", out)
+    assert docs.select("doc_id").distinct().count() == docs.count()
+    li = load_table(spark, "lineitem", out)
+    orders = load_table(spark, "orders", out)
+    orphans = li.join(orders, li.l_orderkey == orders.o_orderkey, "left_anti")
+    assert orphans.count() == 0
+    j5 = QUERIES["j5_parent_child_join"]
+    assert j5(spark, out).count() == 2 * j5(spark, sf_dir).count()
+
+
+def test_scaling_receipt_rejects_unknown_query_before_upsampling(sf_dir, tmp_path):
+    """An unknown query name exits 2, named on stderr, before any
+    upsample dir is made."""
+    import subprocess
+    import sys
+
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_SF_DIR=sf_dir)
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "scaling_receipt.py"), "zz_nope"],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
+    assert "zz_nope" in out.stderr
+    assert os.listdir(tmp_path) == []

@@ -1,44 +1,40 @@
-"""One-shot larger-scale parallel-scaling receipt (r15 verdict item 8).
+"""Scaling receipt: time registered queries on K-times upsampled data.
 
-At sf0.1 every 8-vs-32-core bench ratio sits ~1: the suite is
-fixed-overhead-bound and cannot demonstrate the 100 TB scaling story
-(PERF_r14 scaling block). This tool converts the plan-shape claims
-for the top cost rows into a measured low/high-core ratio on a
-larger input:
+For each K, `upsample` writes a K-times copy of the tables in
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) into a throwaway
+dir under the system temp dir, deleted afterwards unless --keep. The
+named queries then run there through `bench.py` in a fresh process
+(cold JVM, local[$SPARK_GRAFT_CPUS]), each timed as its minimum over
+-n rounds: at N = the CPUs this process may run on for every K, and
+also at max(1, N // 4) for the largest K. The last stdout line is one
+JSON object with per-run seconds, `alpha` per query (t ~ K^alpha
+between the smallest and largest K at N cores) and
+`ratio_low_over_high` per query (low-core over high-core time at the
+largest K; >> 1 means the query parallelizes at that scale).
 
-1. Materialize a K-times upsampled copy of the four big tables
-   (documents / lineitem / events / embeddings — the same
-   honesty-preserving disjoint-copy constructions as
-   tools/scale_sanity.py: token-suffixed shingle spaces, offset key
-   spaces, so per-copy structure is preserved and work grows
-   linearly) into a THROWAWAY dir under /tmp, with the small
-   dimension tables copied verbatim. This is measurement INPUT for
-   this tool only — nothing under /root/testdata is touched, nothing
-   is read back by bench.py or the queries outside this receipt, and
-   the dir is deleted afterwards unless --keep.
-2. For each core count (N, max(1, N // 4)), N = the CPUs this
-   process may run on, run the named queries in a FRESH subprocess
-   (cold JVM, exactly the bench contract's local[$SPARK_GRAFT_CPUS])
-   via `bench.py`, per-query min over N rounds.
-3. Print the result JSON as the last stdout line: per-query seconds
-   and the low/high-core ratio (ratio >> 1 = the query actually
-   parallelizes at this scale).
-
-Usage: python tools/scaling_receipt.py [-k K] [-n N] [--keep] [query ...]
-Default queries: the top sf0.1 cost rows whose 100 TB story the r14
-verdict asked to convert to measurement: pl7, g1, dd14, pl9, t13b, t27.
+Usage: python tools/scaling_receipt.py [-k K1,K2,...] [-n N] [--keep] [query ...]
+Defaults: -k 1,4, -n 2, queries pl7, g1, dd14, pl9, t13b, t27.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import subprocess
 import sys
 import tempfile
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from dot_spark import get_spark
+from dot_spark.queries import QUERIES
+from dot_spark.sources.registry import TABLES, load_table
 
 DEFAULT_QUERIES = [
     "pl7_corpus_build_pipeline",
@@ -49,130 +45,147 @@ DEFAULT_QUERIES = [
     "t27_kneser_ney_score",
 ]
 
-SRC_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# copied once, unchanged
+SHARED_TABLES = ("region", "nation")
+
+# Key columns offset per copy. The columns of one domain share one
+# offset, so every join across tables stays inside a copy and its
+# output grows exactly K-fold.
+KEY_DOMAINS = (
+    (("lineitem", "l_orderkey"), ("orders", "o_orderkey")),
+    (("lineitem", "l_partkey"), ("part", "p_partkey")),
+    (("lineitem", "l_suppkey"), ("supplier", "s_suppkey")),
+    (("orders", "o_custkey"), ("customer", "c_custkey"), ("events", "user_id")),
+    (("documents", "doc_id"),),
+    (("embeddings", "vec_id"),),
+    (("events", "event_id"),),
+)
 
 
-def materialize(k: int, out_dir: str) -> None:
-    """Write the upsampled tables (and verbatim small tables) as one
-    parquet file tree shaped like a testdata sf dir."""
-    import tools.scale_sanity as ss
-    from dot_spark import get_spark
+def _copy(df: DataFrame, table: str, i: int, spans: dict) -> DataFrame:
+    """Copy i of one table: keys shifted by i key spans, and in
+    documents every token suffixed with _i, so copies have disjoint
+    shingle spaces and near-dup clusters never bridge copies
+    (n_chars follows the suffixed text)."""
+    text = F.regexp_replace("text", r"(\S+)", rf"$1_{i}")
+    cols = []
+    for field in df.schema.fields:
+        c = F.col(field.name)
+        if (table, field.name) in spans:
+            c = c + F.lit(i * spans[(table, field.name)])
+        elif (table, field.name) == ("documents", "text"):
+            c = text
+        elif (table, field.name) == ("documents", "n_chars"):
+            c = F.length(text)
+        cols.append(c.cast(field.dataType).alias(field.name))
+    return df.select(cols)
 
-    ss.SF_DIR = SRC_SF_DIR
-    spark = get_spark("scaling_receipt_materialize")
-    big = {
-        "documents": ss.upsampled_docs(spark, k),
-        "events": ss.upsampled_events(spark, k),
-        "embeddings": ss.upsampled_embeddings(spark, k),
-    }
-    # the scale_sanity lineitem upsampler keeps only 3 key columns
-    # (enough for the graph family); queries like dd14/t27 need the
-    # full row — upsample all columns here with the same key offsets
-    from pyspark.sql import functions as F
 
-    li = spark.read.parquet(f"{SRC_SF_DIR}/lineitem.parquet")
-    mx = li.agg(
-        F.max("l_orderkey"), F.max("l_partkey"), F.max("l_suppkey")
-    ).first()
-    o_off, p_off, s_off = mx[0] + 1, mx[1] + 1, mx[2] + 1
-    copies = [
-        li.select(
-            (F.col("l_orderkey") + F.lit(i * o_off)).alias("l_orderkey"),
-            (F.col("l_partkey") + F.lit(i * p_off)).alias("l_partkey"),
-            (F.col("l_suppkey") + F.lit(i * s_off)).alias("l_suppkey"),
-            *[c for c in li.columns if c not in ("l_orderkey", "l_partkey", "l_suppkey")],
-        )
-        for i in range(k)
-    ]
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionByName(c)
-    big["lineitem"] = out
-
+def upsample(spark, src_dir: str, k: int, out_dir: str) -> None:
+    """Write a K-times copy of every table in src_dir to out_dir, as
+    a dir load_table reads like a testdata sf dir. Every column and
+    its type is kept; region and nation are copied once, unchanged."""
+    tables = {t: load_table(spark, t, src_dir) for t in TABLES}
+    spans = {}
+    for domain in KEY_DOMAINS:
+        bounds = [tables[t].agg(F.min(c), F.max(c)).first() for t, c in domain]
+        span = max(hi for _, hi in bounds) - min(lo for lo, _ in bounds) + 1
+        spans.update({col: span for col in domain})
     os.makedirs(out_dir, exist_ok=True)
-    for name, df in big.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
-    for name in ("region", "nation", "customer", "supplier", "part", "orders"):
-        src = f"{SRC_SF_DIR}/{name}.parquet"
-        dst = f"{out_dir}/{name}.parquet"
-        if os.path.isdir(src):
-            shutil.copytree(src, dst, dirs_exist_ok=True)
-        else:
-            shutil.copyfile(src, dst)
-    spark.stop()
+    for t, df in tables.items():
+        copies = [_copy(df, t, i, spans) for i in range(1 if t in SHARED_TABLES else k)]
+        reduce(DataFrame.unionByName, copies).write.mode("overwrite").parquet(
+            f"{out_dir}/{t}.parquet"
+        )
 
 
-def main() -> None:
-    args = sys.argv[1:]
-    k, n, keep = 4, 2, False
+def _bench(names: list[str], sf_dir: str, cpus: int, rounds: int) -> dict:
+    """Per-query seconds of one `bench.py` child run."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS=str(cpus),
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        DOT_SPARK_BENCH_ROUNDS=str(rounds),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(here, "bench.py"), *names],
+        capture_output=True, text=True, env=env, timeout=3600,
+    )
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"bench.py at cpus={cpus} exited {out.returncode}:\n{out.stderr[-2000:]}"
+        )
+    secs = json.loads(out.stdout.strip().splitlines()[-1])["queries"]
+    for q, sec in secs.items():
+        if not isinstance(sec, float):
+            raise RuntimeError(f"{q} at cpus={cpus}: {sec['err']}")
+    return secs
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else list(argv)
+    ks, rounds, keep = [1, 4], 2, False
     names: list[str] = []
     while args:
         a = args.pop(0)
         if a == "-k":
-            k = int(args.pop(0))
+            ks = sorted({int(x) for x in args.pop(0).split(",")})
         elif a == "-n":
-            n = int(args.pop(0))
+            rounds = int(args.pop(0))
         elif a == "--keep":
             keep = True
         else:
             names.append(a)
     names = names or DEFAULT_QUERIES
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        print(f"scaling_receipt.py: unknown query: {' '.join(unknown)}", file=sys.stderr)
+        raise SystemExit(2)
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp_root = tempfile.mkdtemp(prefix=f"sfup_k{k}_")
-    # bench.py reads its "sf" field off the directory name, so the
-    # upsample dir is named like the source dir (K is in the result)
-    up_dir = os.path.join(tmp_root, os.path.basename(SRC_SF_DIR.rstrip("/")))
-    print(f"materializing K={k} upsample of {SRC_SF_DIR} -> {up_dir}")
-    materialize(k, up_dir)
-
-    result: dict = {
-        "k": k,
-        "n_per_side": n,
-        "src_sf_dir": SRC_SF_DIR,
-        "queries": names,
-        "per_cpus": {},
+    src_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    hi = len(os.sched_getaffinity(0))
+    lo = max(1, hi // 4)
+    tmp_root = tempfile.mkdtemp(prefix="sfup_")
+    # bench.py reads its "sf" field off the dir name, so each upsample
+    # dir is named like the source dir (K is in the result)
+    up_dirs = {
+        k: os.path.join(tmp_root, f"k{k}", os.path.basename(src_dir.rstrip("/")))
+        for k in ks
     }
-    cores = len(os.sched_getaffinity(0))
-    hi, lo = cores, max(1, cores // 4)
+    times: dict[tuple[int, int], dict] = {}
     try:
-        for cpus in (hi, lo):
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_CPUS=str(cpus),
-                SPARK_GRAFT_SF_DIR=up_dir,
-                DOT_SPARK_BENCH_ROUNDS=str(n),
-            )
-            out = subprocess.run(
-                [sys.executable, os.path.join(here, "bench.py"), *names],
-                capture_output=True, text=True, env=env, timeout=3600,
-            )
-            if out.returncode != 0:
-                raise RuntimeError(
-                    f"bench.py at cpus={cpus} exited {out.returncode}:\n"
-                    f"{out.stderr[-2000:]}"
-                )
-            line = out.stdout.strip().splitlines()[-1]
-            secs = json.loads(line)["queries"]
-            for q, sec in secs.items():
-                if not isinstance(sec, float):
-                    raise RuntimeError(f"{q} at cpus={cpus}: {sec['err']}")
-            result["per_cpus"][str(cpus)] = secs
-            print(f"cpus={cpus}: {line}")
-        ratios = {}
-        for q in names:
-            t_hi = result["per_cpus"][str(hi)][q]
-            t_lo = result["per_cpus"][str(lo)][q]
-            ratios[q] = round(t_lo / t_hi, 3) if t_hi else None
-        result["ratio_low_over_high"] = ratios
+        spark = get_spark("scaling_receipt_upsample")
+        for k, up_dir in up_dirs.items():
+            print(f"upsampling K={k} of {src_dir} -> {up_dir}", flush=True)
+            upsample(spark, src_dir, k, up_dir)
+        spark.stop()
+
+        plan = [(k, hi) for k in ks] + ([(ks[-1], lo)] if lo != hi else [])
+        for k, cpus in plan:
+            times[(k, cpus)] = _bench(names, up_dirs[k], cpus, rounds)
+            print(json.dumps({"k": k, "cpus": cpus, "seconds": times[(k, cpus)]}), flush=True)
     finally:
         if not keep:
             shutil.rmtree(tmp_root, ignore_errors=True)
-            result["upsample_dir"] = "deleted after run"
-        else:
-            result["upsample_dir"] = up_dir
 
-    print(json.dumps(result))
+    k_lo, k_hi = ks[0], ks[-1]
+    alpha = {
+        q: round(math.log(times[(k_hi, hi)][q] / times[(k_lo, hi)][q]) / math.log(k_hi / k_lo), 3)
+        if k_hi > k_lo else None
+        for q in names
+    }
+    ratio = {q: round(times[(k_hi, lo)][q] / times[(k_hi, hi)][q], 3) for q in names}
+    print(json.dumps({
+        "src_sf_dir": src_dir,
+        "ks": ks,
+        "rounds": rounds,
+        "cpus": {"high": hi, "low": lo},
+        "runs": [{"k": k, "cpus": c, "seconds": s} for (k, c), s in times.items()],
+        "alpha": alpha,
+        "ratio_low_over_high": ratio,
+        "upsample_dir": tmp_root if keep else "deleted after run",
+    }))
 
 
 if __name__ == "__main__":
