@@ -12,8 +12,11 @@ $DOT_SPARK_BENCH_ROUNDS interleaved rounds (default 3):
     python bench.py --all         # every registered query
     python bench.py --ab REF      # interleaved A/B against a git ref
 
-Each query materializes through the "noop" sink so the whole plan
-executes (count() alone would let Catalyst prune work).
+A query's time is its builder plus its sink: one timed region holds
+the `QUERIES[name](spark, sf_dir)` call, which for iterative queries
+runs Spark jobs on the driver while building, and the "noop" write
+that executes the whole returned plan (count() alone would let
+Catalyst prune work).
 """
 
 from __future__ import annotations
@@ -54,13 +57,13 @@ HEADLINE = [
     # stays registered as the gold standard but is not the headline
     "dd5b_bucketed_neardup",
     "dd6_decontamination",
-    # chunk-granularity (passage) dedup — the newest dedup pass
+    # chunk-granularity (passage) dedup
     "dd9_chunk_dedup",
-    # character-granularity substring-span dedup (round 8): the
+    # character-granularity substring-span dedup: the
     # window-fingerprint explode is the highest-volume dedup stage —
     # a lost spread/partial-agg shows up here first
     "dd14_substring_spans",
-    # content-defined chunking (round 8): boundary hashing is an
+    # content-defined chunking: boundary hashing is an
     # O(tokens x window) codegen pass and first-occurrence runs as a
     # window min inside the single chunk-hash exchange — a regression
     # to the join-back shape (2 scans) shows up here as wall time
@@ -73,101 +76,68 @@ HEADLINE = [
     "ss2_ivf_topk",
     # classification over the whole run table
     "c1_classify_runs",
-    # round-7 late additions: native session windows (stateful-agg
-    # machinery), gap-fill grid+LOCF (sequence explode + carry
-    # window), and the prefix-sum corpus shuffle
+    # native session windows (stateful-agg machinery), gap-fill
+    # grid+LOCF (sequence explode + carry window), and the
+    # prefix-sum corpus shuffle
     "st8_session_window",
     "a14_gapfill_locf",
     "p15_corpus_shuffle",
-    # round-7 continuation: the chain-join top-k, cohort retention,
-    # and the mixture resampler
+    # the chain-join top-k, cohort retention, and the mixture
+    # resampler
     "j17_multihop_topk",
     "a22_cohort_retention",
     "p18_mixture_resample",
-    # round-8: the iterative heavies join the headline (r7 verdict
-    # task 2). Plan pins catch SHAPE regressions, but a lost persist
-    # inside an iterative loop only surfaces as wall-time — so the
-    # loops themselves are bench-tracked: PageRank (g1, rank-table
-    # rounds), distributed BPE training (t13, merge rounds over the
-    # word vocab), and the SemDeDup composition (pl9, dd8 clusters ∘
-    # dd5b buckets).
+    # the iterative heavies. Plan pins catch SHAPE regressions, but a
+    # lost persist inside an iterative loop only surfaces as wall
+    # time — so the loops themselves are bench-tracked: PageRank (g1,
+    # rank-table rounds), distributed BPE training (t13, merge rounds
+    # over the word vocab), and the SemDeDup composition (pl9, dd8
+    # clusters ∘ dd5b buckets).
     "g1_pagerank",
     "t13_bpe_merges",
-    # round-11: the batched trainer (4 candidate-window rounds for 16
-    # merges instead of 16 argmax rounds for 4) — the 32k-merge path;
-    # a lost checkpoint or a candidate window that stops pruning
-    # shows up here as wall time
+    # the batched trainer (4 candidate-window rounds for 16 merges
+    # instead of 16 argmax rounds for 4) — the 32k-merge path; a lost
+    # checkpoint or a candidate window that stops pruning shows up
+    # here as wall time
     "t13b_bpe_merges_batched",
     "pl9_semdedup",
-    # multimodal ingest pass (round 8): the decode+hash Python stage
-    # is the family's scale cost — track it
+    # multimodal ingest pass: the decode+hash Python stage is the
+    # family's scale cost — track it
     "mm6_image_phash",
-    # storage-layout rewrite (round 8): the 256-bucket distributed
-    # prefix rank over the Morton key is the clustering rewrite's
-    # whole cost — a lost bucket spread would funnel it to one task
-    # and only wall-time would notice
+    # storage-layout rewrite: the 256-bucket distributed prefix rank
+    # over the Morton key is the clustering rewrite's whole cost — a
+    # lost bucket spread would funnel it to one task and only wall
+    # time would notice
     "p20_zorder_layout",
-    # round-11 mid-round additions: the corpus-filter trio. t25 must
-    # stay a zero-exchange scan-fused pass (a regression to a shuffle
-    # shows in the plan pin, its codegen cost shows here); t24/t26
-    # track the shared-explode LM scoring + bounded-state percentile
-    # cut and the 256-bucket DSIR reweighting respectively.
+    # the corpus-filter trio. t25 must stay a zero-exchange
+    # scan-fused pass (a regression to a shuffle shows in the plan
+    # pin, its codegen cost shows here); t24/t26 track the
+    # shared-explode LM scoring + bounded-state percentile cut and
+    # the 256-bucket DSIR reweighting respectively.
     "t24_perplexity_prune",
     "t25_hashed_linear_quality",
     "t26_dsir_importance",
-    # round-12 addition: interpolated Kneser-Ney scoring — the
-    # bigram-type table's single materialization feeding four
-    # consumers is the cost center; a lost checkpoint re-runs the
-    # pair explode per branch and only wall-time notices
+    # interpolated Kneser-Ney scoring — the bigram-type table's single
+    # materialization feeding four consumers is the cost center; a
+    # lost checkpoint re-runs the pair explode per branch and only
+    # wall time notices
     "t27_kneser_ney_score",
-    # round-14 re-admission (r13 verdict task 6): the end-to-end
-    # corpus build is the engine's user story and sat at ~52 s
-    # OUTSIDE the headline for multiple rounds before the r13 cost
-    # sweep caught its pushdown pathology (now ~7-9 s, mid-pack and
-    # CI-gated).
+    # the end-to-end corpus build is the engine's user story; a
+    # pushdown pathology once kept it at ~52 s outside the headline,
+    # unnoticed, so it is tracked here
     "pl7_corpus_build_pipeline",
     # pl17 (the composed soft corpus build) is deliberately NOT a
-    # headline row. r13 cut it from ~31 s to ~7 s at sf0.1 (the
-    # quality-gate pushdown barrier + the star-contraction closure),
-    # but 7 s would still be ~25% of the suite total and dominate
-    # round-over-round comparability the way dd8 would; its scaling
-    # curve is `tools/scaling_receipt.py pl17_soft_corpus_build`.
+    # headline row: at several seconds at sf0.1 it would dominate the
+    # suite total the way dd8 would; its scaling curve is
+    # `tools/scaling_receipt.py pl17_soft_corpus_build`.
 ]
 
-# Queries whose BUILDER executes the heavy work EAGERLY (iterative
-# loops checkpoint/collect during plan construction — the documented
-# iterative contract), so timing only the final sink write would
-# measure a cached-result scan, not the loops the headline exists to
-# track. For these the timed region wraps the builder call too; for
-# everything else the builder stays outside so plan-compilation
-# overhead never pollutes steady-state engine timings (and prior
-# rounds stay comparable).
-EAGER_BUILD = {
-    "g1_pagerank",
-    "t13_bpe_merges",
-    "t13b_bpe_merges_batched",
-    "pl9_semdedup",
-    # t27's builder collects the bigram-type count, which forces the
-    # pair-explode aggregation AND materializes the type-table
-    # checkpoint before the sink write — timing only the write would
-    # measure a cached-scan scoring pass, not the count build
-    "t27_kneser_ney_score",
-    # pl17's builder runs the survivor-pair closure loop eagerly
-    # (kept here so the timing is honest if it ever joins HEADLINE)
-    "pl17_soft_corpus_build",
-    # pl7's dedup stage runs the closure loop (probe actions) during
-    # plan construction — time the build too or the headline would
-    # measure a cached-scan tail
-    "pl7_corpus_build_pipeline",
-}
 
 def _box_snapshot() -> dict:
     """Load average + cumulative CPU steal/total ticks at this
-    instant. Three rounds of judge/builder time have gone to
-    adjudicating environment variance (the box sees co-tenant CPU
-    steal); recording the box state INSIDE the artifact lets a future
-    reader attribute a slow round to load instead of re-running
-    interleaved protocols."""
+    instant. The box sees co-tenant CPU steal; recording the box
+    state INSIDE the artifact lets a reader attribute a slow round to
+    load instead of re-running interleaved protocols."""
     snap: dict = {}
     try:
         with open("/proc/loadavg") as f:
@@ -195,8 +165,7 @@ def _steal_pct(before: dict, after: dict) -> float | None:
 
 
 def _run_ab(ref: str) -> None:
-    """Interleaved same-box A/B vs another committed tree — the NOTES
-    §9 adjudication protocol as one command (r12 verdict task 4).
+    """Interleaved same-box A/B vs another committed tree.
 
     Protocol: check `ref` out into a throwaway git worktree, then run
     the bench suite in ALTERNATING subprocesses (HEAD, ref, ref,
@@ -215,7 +184,7 @@ def _run_ab(ref: str) -> None:
     Prints ONE JSON line with an "ab" block: per-query {head, ref}
     mins, the totals and ratio over those queries, per-run steal
     telemetry, and the run order — a machine-readable noise
-    adjudication receipt instead of a NOTES narrative.
+    adjudication receipt.
     """
     import shutil
     import subprocess
@@ -367,18 +336,18 @@ def main(argv: list[str] | None = None) -> None:
     # pays plan compilation + JIT. The per-query min is the
     # steady-state engine cost — the number that extrapolates to a
     # real cluster.
-    # Per-query failure isolation: one broken query must cost its own
-    # row (an "err" entry), never the whole artifact — round 4 lost
-    # its entire perf record to a single crashing query.
+    # Per-query failure isolation: one broken query (builder or sink)
+    # must cost its own row (an "err" entry), never the whole
+    # artifact.
     n_rounds = int(os.environ.get("DOT_SPARK_BENCH_ROUNDS", "3"))
-    # STEAL-AWARE RETRY (r11 verdict task 3): a round that ran under
-    # non-trivial co-tenant CPU steal (>0.5% of ticks) is a tainted
-    # sample — its times measure the neighbors, not the engine. Each
-    # tainted round buys ONE replacement round (bounded by
-    # DOT_SPARK_BENCH_MAX_EXTRA, default 2, so a chronically noisy
-    # box still terminates); the per-query min then draws from at
-    # least n_rounds clean-ish samples instead of depending on
-    # driver-box luck. The artifact records how many retries fired.
+    # STEAL-AWARE RETRY: a round that ran under non-trivial co-tenant
+    # CPU steal (>0.5% of ticks) is a tainted sample — its times
+    # measure the neighbors, not the engine. Each tainted round buys
+    # ONE replacement round (bounded by DOT_SPARK_BENCH_MAX_EXTRA,
+    # default 2, so a chronically noisy box still terminates); the
+    # per-query min then draws from at least n_rounds clean-ish
+    # samples instead of depending on driver-box luck. The artifact
+    # records how many retries fired.
     max_extra = int(os.environ.get("DOT_SPARK_BENCH_MAX_EXTRA", "2"))
     best: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -389,16 +358,10 @@ def main(argv: list[str] | None = None) -> None:
             if name in errors:
                 continue
             try:
-                if name in EAGER_BUILD:
-                    t0 = time.time()
-                    df = QUERIES[name](spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = time.time() - t0
-                else:
-                    df = QUERIES[name](spark, sf_dir)
-                    t0 = time.time()
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = time.time() - t0
+                t0 = time.time()
+                df = QUERIES[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
             except Exception as exc:  # isolate: record and move on
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 best.pop(name, None)
@@ -429,7 +392,7 @@ def main(argv: list[str] | None = None) -> None:
                 # box-state telemetry: loadavg at the start and after
                 # each interleaved round, plus per-round CPU-steal %.
                 # A round whose steal_pct is non-trivial (>1-2%) or
-                # whose loadavg exceeds the 32 local cores explains a
+                # whose loadavg exceeds the local core count explains a
                 # slow min without any code change.
                 "box": {
                     "loadavg": [m.get("loadavg") for m in round_marks],

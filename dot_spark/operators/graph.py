@@ -40,6 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# |V| at or below which pagerank, bfs_levels and label_propagation
+# broadcast their per-node table every round; larger graphs shuffle
+# it into the cached edge partitioning instead.
+BROADCAST_NODES = 2_000_000
+
 
 def copurchase_edges(
     lineitem: DataFrame,
@@ -191,7 +196,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    broadcast_nodes: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over a (src, dst) edge list, fixed iteration count.
 
@@ -263,14 +267,14 @@ def pagerank(
         deg.unpersist()
         return spark.createDataFrame([], "node long, rank double")
     # Two physical regimes for the per-iteration contribution pass:
-    # - |V| <= broadcast_nodes: BROADCAST the (node, out_deg, rank)
+    # - |V| <= BROADCAST_NODES: BROADCAST the (node, out_deg, rank)
     #   table each round; the contribution groupBy(dst) aggregates
     #   inside the cached dst partitioning with NO edge-sized
     #   exchange per round.
     # - larger graphs: ranks cannot broadcast; the rank table (the
     #   small side) shuffles into the cached edge partitioning and
     #   the groupBy(dst) exchange moves map-side combined partials.
-    small = n <= broadcast_nodes
+    small = n <= BROADCAST_NODES
     if not small:
         # big regime: the rank table shuffles into the cached edge
         # partitioning on SRC every round — re-key the cache from
@@ -318,7 +322,6 @@ def bfs_levels(
     edges: DataFrame,
     source: int,
     max_depth: int = 3,
-    broadcast_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Single-source BFS levels (node, dist) for every node within
     ``max_depth`` hops of ``source`` — the Pregel-style frontier
@@ -337,7 +340,7 @@ def bfs_levels(
 
     TWO REGIMES (the pagerank/label_propagation discipline, r14
     optimization round): frontier and visited are both bounded by
-    |V|, so when |V| <= ``broadcast_nodes`` the per-round gather
+    |V|, so when |V| <= ``BROADCAST_NODES`` the per-round gather
     BROADCASTS the frontier and the dedup anti-join BROADCASTS the
     visited set — without the hints the planner sized the sides by
     estimate and picked the |E|-row EDGE list as the build side
@@ -353,7 +356,7 @@ def bfs_levels(
     # table, so it also materializes the cache — no separate count()
     # pass (r14 optimization round, the pagerank consolidation)
     n_nodes = edges.select("src").distinct().count()
-    small = n_nodes <= broadcast_nodes
+    small = n_nodes <= BROADCAST_NODES
     visited = spark.createDataFrame(
         [(source, 0)], "node long, dist long"
     ).localCheckpoint(eager=True)
@@ -582,9 +585,7 @@ def link_prediction(
     ).limit(top_k)
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 4, broadcast_nodes: int = 2_000_000
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Synchronous label propagation (community detection): every
     node starts labeled with itself; each round a node adopts the
     most frequent label among its NEIGHBORS, ties broken to the
@@ -604,7 +605,7 @@ def label_propagation(
     InMemoryTableScan keeps outputPartitioning, so every round rides
     the cached partitioning.
 
-    Small regime (|V| <= ``broadcast_nodes``) — a ZERO-EXCHANGE
+    Small regime (|V| <= ``BROADCAST_NODES``) — a ZERO-EXCHANGE
     round (r14 optimization round, guide §2.4): edges cached
     hash-partitioned by SRC; the gather join BROADCASTS the
     (node, label) table (without the hint the planner sizes the two
@@ -646,7 +647,7 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    small = labels.count() <= broadcast_nodes
+    small = labels.count() <= BROADCAST_NODES
     # regime-keyed cache, materialized by the first round that reads
     # it (the final eager round checkpoint materializes the whole
     # chain before the finally-unpersist) — the old separate count()

@@ -160,25 +160,33 @@ def test_session_master_defaults_to_cpu_affinity(monkeypatch):
 
 def test_bench_isolates_per_query_failures(spark, sf_dir, monkeypatch, capsys):
     """One broken query must cost its own {"err": ...} row, never the
-    whole bench artifact (round 4 lost its entire perf record to a
-    single crashing query)."""
+    whole bench artifact; and a query's row is its builder plus its
+    sink, so a builder's own time is never left out."""
     import json
+    import time
 
     import bench
 
     def boom(spark, sf_dir):
         raise RuntimeError("synthetic bench failure")
 
+    def slow_build(spark, sf_dir):
+        time.sleep(0.3)
+        return spark.range(1)
+
     monkeypatch.setattr(
-        bench, "QUERIES", {**bench.QUERIES, "zz_broken": boom}
+        bench,
+        "QUERIES",
+        {**bench.QUERIES, "zz_broken": boom, "zz_slow_build": slow_build},
     )
     monkeypatch.setenv("DOT_SPARK_BENCH_ROUNDS", "1")
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
-    bench.main(["s1_scan_projection", "zz_broken"])
+    bench.main(["s1_scan_projection", "zz_broken", "zz_slow_build"])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["n_errors"] == 1
     assert "synthetic bench failure" in out["queries"]["zz_broken"]["err"]
     assert isinstance(out["queries"]["s1_scan_projection"], float)
+    assert out["queries"]["zz_slow_build"] >= 0.3
     assert out["value"] > 0
     # a name the registry does not know exits non-zero and is named
     with pytest.raises(SystemExit) as exc:

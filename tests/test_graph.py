@@ -15,8 +15,18 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dot_spark.operators import graph
 from dot_spark.operators.graph import copurchase_edges, pagerank, triangle_count
 from dot_spark.plans import physical_plan
+
+
+def _each_regime(monkeypatch):
+    """Yield twice: with graph.BROADCAST_NODES at its default (every
+    graph here broadcasts its per-node table), then at 0 (every graph
+    takes the large-|V| shuffle branch)."""
+    for limit in (graph.BROADCAST_NODES, 0):
+        monkeypatch.setattr(graph, "BROADCAST_NODES", limit)
+        yield limit
 
 
 def _edges_df(spark, pairs):
@@ -77,7 +87,7 @@ def test_pagerank_mass_conserved_and_star_center_dominates(spark):
     assert by_node[0] > max(v for k, v in by_node.items() if k != 0)
 
 
-def test_pagerank_matches_model_on_random_graph(spark):
+def test_pagerank_matches_model_on_random_graph(spark, monkeypatch):
     rng = random.Random(407)
     nodes = list(range(30))
     pairs = {
@@ -85,14 +95,15 @@ def test_pagerank_matches_model_on_random_graph(spark):
         for _ in range(80)
         for a, b in [sorted(rng.sample(nodes, 2))]
     }
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(_edges_df(spark, pairs), iterations=4).collect()
-    }
     want = _pagerank_model(pairs, iterations=4)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-12)
+    for limit in _each_regime(monkeypatch):
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(_edges_df(spark, pairs), iterations=4).collect()
+        }
+        assert set(got) == set(want), limit
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12), limit
 
 
 def test_pagerank_plan_depth_constant_across_iterations(spark):
@@ -160,7 +171,7 @@ def test_bfs_levels_line_graph(spark):
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}  # node 5 is 4 hops out
 
 
-def test_bfs_levels_matches_model_on_random_graph(spark):
+def test_bfs_levels_matches_model_on_random_graph(spark, monkeypatch):
     from dot_spark.operators.graph import bfs_levels
 
     rng = random.Random(721)
@@ -171,11 +182,14 @@ def test_bfs_levels_matches_model_on_random_graph(spark):
         for a, b in [sorted(rng.sample(nodes, 2))]
     }
     source = min(a for a, _ in pairs)
-    got = {
-        r["node"]: r["dist"]
-        for r in bfs_levels(_edges_df(spark, pairs), source=source, max_depth=3).collect()
-    }
-    assert got == _bfs_model(pairs, source, 3)
+    for limit in _each_regime(monkeypatch):
+        got = {
+            r["node"]: r["dist"]
+            for r in bfs_levels(
+                _edges_df(spark, pairs), source=source, max_depth=3
+            ).collect()
+        }
+        assert got == _bfs_model(pairs, source, 3), limit
 
 
 def test_copurchase_edges_symmetric_and_loop_free(spark, sf_dir):
@@ -296,7 +310,7 @@ def test_link_prediction_topk_order_is_deterministic(spark):
     assert r1 == r2 and len(r1) == 5
 
 
-def test_label_propagation_separates_disjoint_cliques(spark):
+def test_label_propagation_separates_disjoint_cliques(spark, monkeypatch):
     """Two disjoint cliques converge to two communities, each labeled
     by its minimum node (deterministic tie-break); a bridge-less
     graph can never merge them."""
@@ -310,9 +324,10 @@ def test_label_propagation_separates_disjoint_cliques(spark):
     edges = spark.createDataFrame(
         clique([1, 2, 3]) + clique([10, 11, 12, 13]), "src long, dst long"
     )
-    got = {r.node: r.label for r in label_propagation(edges, rounds=4).collect()}
-    assert {got[n] for n in (1, 2, 3)} == {1}
-    assert {got[n] for n in (10, 11, 12, 13)} == {10}
+    for limit in _each_regime(monkeypatch):
+        got = {r.node: r.label for r in label_propagation(edges, rounds=4).collect()}
+        assert {got[n] for n in (1, 2, 3)} == {1}, limit
+        assert {got[n] for n in (10, 11, 12, 13)} == {10}, limit
 
 
 def test_label_propagation_fixed_rounds_deterministic(spark):
@@ -332,7 +347,7 @@ def test_label_propagation_fixed_rounds_deterministic(spark):
     assert runs[0] == runs[1]
 
 
-def test_label_propagation_directed_input_keeps_all_nodes(spark):
+def test_label_propagation_directed_input_keeps_all_nodes(spark, monkeypatch):
     """On a DIRECTED edge list every node must appear in the output:
     sink-only nodes start self-labeled, and nodes receiving no votes
     in a round keep their label instead of vanishing (pre-fix, src-
@@ -343,8 +358,9 @@ def test_label_propagation_directed_input_keeps_all_nodes(spark):
     edges = spark.createDataFrame(
         [(1, 2), (3, 2), (2, 4)], "src long, dst long"
     )
-    got = {r.node: r.label for r in label_propagation(edges, rounds=3).collect()}
-    assert set(got) == {1, 2, 3, 4}
+    for limit in _each_regime(monkeypatch):
+        got = {r.node: r.label for r in label_propagation(edges, rounds=3).collect()}
+        assert set(got) == {1, 2, 3, 4}, limit
 
 
 def test_cap_degree_identity_below_cap(spark, sf_dir):

@@ -226,9 +226,11 @@ def test_aqe_skew_split_engages_on_unsalted_hot_join(spark):
 
 def test_upsample_copies_every_table_k_fold_with_joins_intact(spark, sf_dir, tmp_path):
     """K=2 upsample: every table keeps its schema, K-copied tables
-    double and region/nation do not, doc ids stay unique, lineitem
-    keeps referential integrity to orders, and a join across tables
-    (j5) returns exactly twice its source rows."""
+    double and region/nation do not, doc ids stay unique, each
+    embedding copy lands in its own label cells (twice the labels,
+    each holding as many rows as a source label), lineitem keeps
+    referential integrity to orders, and a join across tables (j5)
+    returns exactly twice its source rows."""
     from dot_spark.queries import QUERIES
     from dot_spark.sources.registry import TABLES
     from tools.scaling_receipt import SHARED_TABLES, upsample
@@ -241,6 +243,14 @@ def test_upsample_copies_every_table_k_fold_with_joins_intact(spark, sf_dir, tmp
         assert up.count() == (1 if t in SHARED_TABLES else 2) * src.count(), t
     docs = load_table(spark, "documents", out)
     assert docs.select("doc_id").distinct().count() == docs.count()
+
+    def label_cells(d):
+        rows = load_table(spark, "embeddings", d).groupBy("label").count().collect()
+        return sorted(r["count"] for r in rows)
+
+    src_cells, up_cells = label_cells(sf_dir), label_cells(out)
+    assert len(up_cells) == 2 * len(src_cells)
+    assert up_cells == sorted(src_cells * 2)
     li = load_table(spark, "lineitem", out)
     orders = load_table(spark, "orders", out)
     orphans = li.join(orders, li.l_orderkey == orders.o_orderkey, "left_anti")
